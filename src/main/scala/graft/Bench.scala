@@ -1,21 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.excludedRules",
-              GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(Session.envCpus).getOrCreate()
     // Reliable checkpoint dir: the CC pointer-jumping queries
     // (q59/q60/q133/q134) checkpoint each round here instead of
     // memory-only pins — the fault-tolerant loop a real cluster runs
@@ -26,24 +14,6 @@ object Bench {
     val cpDir = java.nio.file.Files.createTempDirectory("graft_bench_cp")
     spark.sparkContext.setCheckpointDir(cpDir.toString)
     try {
-    // The between-sample Pins.sweepAll drop of localCheckpoint pins is
-    // BY DESIGN (the pin is dead once its query's terminal action ran),
-    // but each drop logs a "locally checkpointed ... cannot be
-    // recomputed" WARN — dozens of them crowd the tail the harness
-    // parses the JSON line out of. Expected-by-contract, so quiet that
-    // one logger here (Bench only; operators keep the default).
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // Global windows in this engine only ever run over aggregate-
-    // bounded frames (frequency histograms, daily rollups, top-k
-    // slivers — each site documents its bound), so WindowExec's
-    // single-partition WARN fires ~135× per bench run on plans that
-    // are correct by design. The plan-shape specs, not this logger,
-    // are the guard against a corpus-sized global window appearing.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
     // Warm the executor/codegen/parquet-reader paths once so the first
     // timed query measures the operator, not JVM startup. Guarded: a
     // broken/missing sf dir must still reach the JSON line so the

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.excludedRules",
-              GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has TIMESTAMP(NANOS); read as long + normalize
-      // in graft.io.Tables.load.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TZ-typed timestamps otherwise write INT96 (nanos), which the
-      // driver's comparator hashes differently from the oracle's
-      // microsecond timestamps.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder(Session.envCpus).getOrCreate()
     // q36's oracle compares against a persisted vector intermediate;
     // only the verify path pays for that export (bench must time the
     // pipeline, not a parquet write) — see Pipeline.Q36PersistProp.

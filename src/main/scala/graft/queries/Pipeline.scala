@@ -389,11 +389,10 @@ object Pipeline {
         val e = t(s, sfDir, "embeddings")
         // both trainers read the SAME (id, intVec) projection — pin it
         // once (one corpus quantize pass, not one per trainer)
-        val iv = Ann.pinIntVec(e, "vec_id", "embedding")
-        val (cents, books) = try {
-          (Ann.kmeansFitIntPinned(iv, k = 8, rounds = 2),
-           Ann.pqTrainIntPinned(iv, k = 8, rounds = 2))
-        } finally graft.io.Pins.release(iv)
+        val (cents, books) = Ann.withIntVec(e, "vec_id", "embedding") { iv =>
+          (Ann.kmeansFitInt(iv, k = 8, rounds = 2),
+           Ann.pqTrainInt(iv, k = 8, rounds = 2))
+        }
         Ann.ivfPqWriteIndex(e, "vec_id", "embedding", cents, books, path)
         builtTrainedIdx.put(path, (cents, books))
         (cents, books)
@@ -565,7 +564,7 @@ object Pipeline {
 
   /** Deterministic IVF coarse centroids for q48/q51: per-label integer
     * means, floor(sum/n) on the 1e-3 grid — exactly re-derivable by a
-    * SQL oracle (unlike KMeans-trained centroids, Ann.ivfTrain). The
+    * SQL oracle with no training replay (q135 replays the trainer). The
     * collect is a k-row aggregate (k = #labels): broadcast-small-side.
     */
   private[graft] def labelCentroids(e: DataFrame): Seq[(Long, Seq[Long])] =
@@ -1422,12 +1421,11 @@ object Pipeline {
     // IVF coarse quantization (the ANN scale path's build side): assign
     // every vector to its nearest centroid cell — at 100 TB the table
     // is then written partitionBy("cell") and a probe reads nprobe
-    // cells via partition pruning (Ann.ivfTopK). Centroids here are
+    // cells via partition pruning (Ann.ivfTopKInt). Centroids here are
     // per-label integer means (floor(sum/n) on the 1e-3 grid): a
-    // deterministic seeded-init analogue both engines derive exactly;
-    // the KMeans-trained variant (Ann.ivfTrain) is spec'd but its
-    // centroids are not reproducible by a SQL oracle. The collect is a
-    // k-row aggregate (k = #labels) — the broadcast-small-side pattern.
+    // deterministic seeded-init analogue both engines derive exactly
+    // (q135 covers the trained centroids). The collect is a k-row
+    // aggregate (k = #labels) — the broadcast-small-side pattern.
     "q48_ivf_assign" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       Ann.ivfAssignInt(e, "embedding", labelCentroids(e))
@@ -1743,13 +1741,12 @@ object Pipeline {
     // codebook TRAINER itself on the verified surface — deterministic
     // seeds (k smallest vec_ids), E-step argmin integer L2² (ties to
     // the smallest cell), M-step per-dim floorDiv means, emptied cells
-    // keep their centroid. Spark ML's KMeans (Ann.ivfTrain) stays the
-    // production float path; this is the bit-reproducible twin an
-    // oracle can replay round for round. Output = the trained
-    // codebook as (cell, dim, value) scalar rows.
+    // keep their centroid. The same trainer builds the store's index
+    // (VectorIndex.build); an oracle replays it round for round.
+    // Output = the trained codebook as (cell, dim, value) scalar rows.
     "q135_kmeans_train" -> ((s, dir) => {
-      val cents = Ann.kmeansFitInt(t(s, dir, "embeddings"), "vec_id",
-                                   "embedding", k = 8, rounds = 2)
+      val cents = Ann.withIntVec(t(s, dir, "embeddings"), "vec_id",
+                                 "embedding")(Ann.kmeansFitInt(_, k = 8, rounds = 2))
       import s.implicits._
       cents.flatMap { case (cell, cv) =>
         cv.zipWithIndex.map { case (v, i) => (cell, (i + 1).toLong, v) }
@@ -1762,12 +1759,12 @@ object Pipeline {
     // not re-shard.
     "q136_kmeans_cells" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      // trainer AND the extra E-step read ONE (id, intVec) pin — the
-      // assignment pass no longer re-quantizes the corpus. Pin released
-      // by the harness sweep (the returned frame still reads it).
-      val iv = Ann.pinIntVec(e, "vec_id", "embedding")
-      val cents = Ann.kmeansFitIntPinned(iv, k = 8, rounds = 2)
-      Ann.assignMinL2Int(iv, "__iv", cents)
+      // the returned frame is lazy, so the E-step reads its own
+      // quantized projection, not the trainer's loaned pin (q140's shape)
+      val cents = Ann.withIntVec(e, "vec_id", "embedding")(
+        Ann.kmeansFitInt(_, k = 8, rounds = 2))
+      Ann.assignMinL2Int(
+          e.withColumn("__iv", Ann.intVec(col("embedding"))), "__iv", cents)
         .groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
         .orderBy(col("cell"))
     }),
@@ -1779,8 +1776,8 @@ object Pipeline {
     // stack slices per subspace, so trained books replace the q48
     // label stand-ins without touching the search path.
     "q137_pq_train" -> ((s, dir) => {
-      val books = Ann.pqTrainInt(t(s, dir, "embeddings"), "vec_id",
-                                 "embedding", k = 8, rounds = 2)
+      val books = Ann.withIntVec(t(s, dir, "embeddings"), "vec_id",
+                                 "embedding")(Ann.pqTrainInt(_, k = 8, rounds = 2))
       import s.implicits._
       books.flatMap { case (cell, cv) =>
         cv.zipWithIndex.map { case (v, i) => (cell, (i + 1).toLong, v) }
@@ -1798,8 +1795,8 @@ object Pipeline {
       val e = t(s, dir, "embeddings")
       val sample = e.filter(
         graft.dedup.Dedup.hashBucket(col("vec_id"), 100) < 50)
-      val cents = Ann.kmeansFitInt(sample, "vec_id", "embedding",
-                                   k = 8, rounds = 2)
+      val cents = Ann.withIntVec(sample, "vec_id", "embedding")(
+        Ann.kmeansFitInt(_, k = 8, rounds = 2))
       Ann.assignMinL2Int(
           e.withColumn("__iv", Ann.intVec(col("embedding"))), "__iv", cents)
         .groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
@@ -1812,9 +1809,8 @@ object Pipeline {
     // crawl/shard arriving together), still fully deterministic and
     // oracle-replayed (8 unrolled argmax stages + the same 2 rounds).
     "q139_kmeans_fp_train" -> ((s, dir) => {
-      val cents = Ann.kmeansFitInt(t(s, dir, "embeddings"), "vec_id",
-                                   "embedding", k = 8, rounds = 2,
-                                   seedFn = Ann.farthestPointSeeds)
+      val cents = Ann.withIntVec(t(s, dir, "embeddings"), "vec_id", "embedding")(
+        Ann.kmeansFitInt(_, k = 8, rounds = 2, seedFn = Ann.farthestPointSeeds))
       import s.implicits._
       cents.flatMap { case (cell, cv) =>
         cv.zipWithIndex.map { case (v, i) => (cell, (i + 1).toLong, v) }
@@ -1829,13 +1825,11 @@ object Pipeline {
     // trainers' rounds plus the search chained in one SQL statement).
     "q138_trained_search" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      // one shared (id, intVec) pin feeds BOTH trainers (was one
-      // quantize-and-pin pass per trainer)
-      val iv = Ann.pinIntVec(e, "vec_id", "embedding")
-      val (cents, books) = try {
-        (Ann.kmeansFitIntPinned(iv, k = 8, rounds = 2),
-         Ann.pqTrainIntPinned(iv, k = 8, rounds = 2))
-      } finally graft.io.Pins.release(iv)
+      // one shared (id, intVec) pin feeds BOTH trainers
+      val (cents, books) = Ann.withIntVec(e, "vec_id", "embedding") { iv =>
+        (Ann.kmeansFitInt(iv, k = 8, rounds = 2),
+         Ann.pqTrainInt(iv, k = 8, rounds = 2))
+      }
       val qv = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).map(Ann.quantizeL)
       val indexed = Ann.pqEncodeInt(
@@ -1938,7 +1932,8 @@ object Pipeline {
     // One scored pass, two windows, exact-integer hit counts.
     "q143_ann_recall" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val cents = Ann.kmeansFitInt(e, "vec_id", "embedding", k = 8, rounds = 2)
+      val cents = Ann.withIntVec(e, "vec_id", "embedding")(
+        Ann.kmeansFitInt(_, k = 8, rounds = 2))
       val queries = e.filter(col("vec_id") < 5)
         .select(col("vec_id").cast("long"), col("embedding"))
         .collect().map(r =>
@@ -3302,13 +3297,13 @@ object Pipeline {
     // rank<=cap pushes map-side (WindowGroupLimit).
     "q156_balanced_sample" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      // one (id, intVec) pin for trainer + assignment (the q136
-      // shared-pin layout); __id is vec_id under its pin alias
-      val iv = Ann.pinIntVec(e, "vec_id", "embedding")
-      val cents = Ann.kmeansFitIntPinned(iv, k = 8, rounds = 2)
-      val asg = Ann.assignMinL2Int(iv, "__iv", cents)
+      // trainer as q136; the lazy assignment reads its own projection
+      val cents = Ann.withIntVec(e, "vec_id", "embedding")(
+        Ann.kmeansFitInt(_, k = 8, rounds = 2))
+      val asg = Ann.assignMinL2Int(
+        e.withColumn("__iv", Ann.intVec(col("embedding"))), "__iv", cents)
       Curation.balancedSample(
-          asg.select(col("cell"), col("__id").as("vec_id")),
+          asg.select(col("cell"), col("vec_id")),
           "cell", "vec_id", cap = 10)
         .orderBy(col("cell"), col("rk"))
     }),

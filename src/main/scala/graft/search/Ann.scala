@@ -451,30 +451,6 @@ object Ann {
       .select(col(idCol), col("dot"))
   }
 
-  /** Train the IVF coarse quantizer: k-means over the embedding column
-    * (Spark ML — distributed Lloyd's with k-means|| init, fixed seed).
-    * Returns the centroid list to feed [[ivfAssign]]/[[ivfTopK]]; at
-    * scale you train on a sample and broadcast the result.
-    */
-  def ivfTrain(embeddings: DataFrame, vecCol: String, k: Int,
-               seed: Long = 42L, maxIter: Int = 20): Seq[Seq[Float]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val feats = embeddings.select(
-      array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(maxIter)
-      .fit(feats)
-    model.clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat))
-  }
-
-  /** L2 assignment over an ALREADY-INTEGER vector column — k-means'
-    * E-step ([[ivfAssignInt]] is the max-dot MIPS form): appends
-    * `cell` = the centroid with the smallest exact-integer L2², ties
-    * to the SMALLEST cell id (struct array_min is lexicographic). The
-    * per-row score is ¦c¦² − 2·v·c — the constant ¦v¦² term is
-    * dropped, which cannot change the argmin or its ties. One
-    * broadcast-literal pass, no shuffle.
-    */
   /** The argmin-L2² cell column over integer codewords: ¦c¦² − 2·v·c
     * scored per codeword (the constant ¦v¦² dropped — argmin- and
     * tie-invariant), struct array_min picking (min score, min cell).
@@ -491,15 +467,40 @@ object Ann {
              lit(id).as("cell"))
     }: _*)).getField("cell")
 
+  /** L2 assignment over an ALREADY-INTEGER vector column — k-means'
+    * E-step ([[ivfAssignInt]] is the max-dot MIPS form): appends
+    * `cell` = the centroid with the smallest exact-integer L2², ties
+    * to the SMALLEST cell id (struct array_min is lexicographic). The
+    * per-row score is ¦c¦² − 2·v·c — the constant ¦v¦² term is
+    * dropped, which cannot change the argmin or its ties. One
+    * broadcast-literal pass, no shuffle.
+    */
   def assignMinL2Int(df: DataFrame, ivCol: String,
                      centroids: Seq[(Long, Seq[Long])]): DataFrame =
     df.withColumn("cell", minL2Cell(col(ivCol), centroids))
 
-  /** EXACT-INTEGER LLOYD'S K-MEANS — the deterministic, oracle-exact
-    * twin of [[ivfTrain]] (Spark ML trains in floats with k-means||
-    * random init: right for production IVF codebooks, impossible to
-    * re-derive bit-for-bit in another engine). This form puts the
-    * TRAINER itself on the verified surface:
+  /** Loan the `(__id, __iv)` integer-grid projection the trainers (and
+    * any E-step consumer) read: pin it, run `body`, release the pin.
+    * A query that trains a coarse quantizer AND PQ codebooks, or
+    * trains then assigns, runs every consumer inside ONE loan, so the
+    * corpus is quantized a single time. Whatever `body` returns must
+    * not read the pin lazily — it is gone once the loan ends.
+    */
+  def withIntVec[A](embeddings: DataFrame, idCol: String, vecCol: String)
+                   (body: DataFrame => A): A = {
+    val iv = embeddings
+      .select(col(idCol).as("__id"), intVec(col(vecCol)).as("__iv"))
+      // read by the seed scan + every round; released via Pins —
+      // Dataset.unpersist does NOT drop a localCheckpoint pin
+      .localCheckpoint(true)
+    try body(iv)
+    finally graft.io.Pins.release(iv)
+  }
+
+  /** EXACT-INTEGER LLOYD'S K-MEANS over a [[withIntVec]] frame — the
+    * deterministic, oracle-exact IVF trainer: every step re-derives
+    * bit-for-bit in another engine, which puts the TRAINER itself on
+    * the verified surface:
     *
     *  - vectors on the 1e-3 integer grid ([[intVec]]);
     *  - seeds via `seedFn` — [[idOrderSeeds]] (default: the `k`
@@ -519,35 +520,9 @@ object Ann {
     * shuffling ≤ k rows) plus a k-row collect — the same posture as
     * the IVF build the centroids feed.
     */
-  /** The `(__id, __iv)` integer-grid projection both trainers (and any
-    * E-step consumer) read — pinned ONCE so a query that trains a
-    * coarse quantizer AND PQ codebooks (q138/q141/q147's build) or
-    * trains then assigns (q136/q156) quantizes the corpus a single
-    * time instead of once per consumer. Caller owns the release
-    * (`graft.io.Pins.release`).
-    */
-  def pinIntVec(embeddings: DataFrame, idCol: String, vecCol: String): DataFrame =
-    embeddings
-      .select(col(idCol).as("__id"), intVec(col(vecCol)).as("__iv"))
-      // read by the seed scan + every round; released via Pins —
-      // Dataset.unpersist does NOT drop a localCheckpoint pin
-      .localCheckpoint(true)
-
-  def kmeansFitInt(embeddings: DataFrame, idCol: String, vecCol: String,
-                   k: Int, rounds: Int = 2, dims: Int = 64,
+  def kmeansFitInt(iv: DataFrame, k: Int, rounds: Int = 2, dims: Int = 64,
                    seedFn: (DataFrame, Int) => Seq[(Long, Seq[Long])] =
                      idOrderSeeds): Seq[(Long, Seq[Long])] = {
-    val iv = pinIntVec(embeddings, idCol, vecCol)
-    try kmeansFitIntPinned(iv, k, rounds, dims, seedFn)
-    finally graft.io.Pins.release(iv)
-  }
-
-  /** [[kmeansFitInt]] over an already-pinned [[pinIntVec]] frame —
-    * identical arithmetic, shared-pin form. */
-  def kmeansFitIntPinned(iv: DataFrame, k: Int, rounds: Int = 2,
-                         dims: Int = 64,
-                         seedFn: (DataFrame, Int) => Seq[(Long, Seq[Long])] =
-                           idOrderSeeds): Seq[(Long, Seq[Long])] = {
     val seeds = seedFn(iv, k)
     require(seeds.size == k, s"need at least k=$k vectors, got ${seeds.size}")
     (0 until rounds).foldLeft(seeds) { (cents, _) =>
@@ -611,6 +586,22 @@ object Ann {
     chosen.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
   }
 
+  /** One-sided chamfer between two centroid lists: for each `from`
+    * cell, the exact-integer L2² to its nearest `to` centroid (ties to
+    * the smallest `to` cell). The matching-free distance both drift
+    * surfaces use — [[centroidDrift]] (two trainings) and the served
+    * index's sidecar-vs-fresh check (`Main drift`). k² driver
+    * arithmetic.
+    */
+  def centroidChamfer(from: Seq[(Long, Seq[Long])],
+                      to: Seq[(Long, Seq[Long])]): Seq[(Long, Long, Long)] =
+    from.map { case (oc, ov) =>
+      val (nc, d2) = to.map { case (ncell, nv) =>
+        (ncell, ov.zip(nv).map { case (a, b) => (a - b) * (a - b) }.sum)
+      }.minBy { case (ncell, d) => (d, ncell) }
+      (oc, nc, d2)
+    }
+
   /** CODEBOOK DRIFT DETECTION — the measured retrain trigger the
     * maintenance tier's contract points at ([[ivfPqAppendIndex]]:
     * "codebook drift is a retrain-and-rebuild event", but nothing yet
@@ -630,36 +621,22 @@ object Ann {
     * k-row outputs — at 100 TB both slices are hash samples (the q140
     * recipe), so the trigger costs sample-scale, never corpus-scale.
     */
-  /** One-sided chamfer between two centroid lists: for each `from`
-    * cell, the exact-integer L2² to its nearest `to` centroid (ties to
-    * the smallest `to` cell). The matching-free distance both drift
-    * surfaces use — [[centroidDrift]] (two trainings) and the served
-    * index's sidecar-vs-fresh check (`Main drift`). k² driver
-    * arithmetic.
-    */
-  def centroidChamfer(from: Seq[(Long, Seq[Long])],
-                      to: Seq[(Long, Seq[Long])]): Seq[(Long, Long, Long)] =
-    from.map { case (oc, ov) =>
-      val (nc, d2) = to.map { case (ncell, nv) =>
-        (ncell, ov.zip(nv).map { case (a, b) => (a - b) * (a - b) }.sum)
-      }.minBy { case (ncell, d) => (d, ncell) }
-      (oc, nc, d2)
-    }
-
   def centroidDrift(oldEmb: DataFrame, newEmb: DataFrame, idCol: String,
                     vecCol: String, k: Int = 8, rounds: Int = 2,
                     dims: Int = 64): DataFrame = {
-    val o = kmeansFitInt(oldEmb, idCol, vecCol, k, rounds, dims)
-    val n = kmeansFitInt(newEmb, idCol, vecCol, k, rounds, dims)
+    def fit(e: DataFrame) =
+      withIntVec(e, idCol, vecCol)(kmeansFitInt(_, k, rounds, dims))
+    val o = fit(oldEmb)
+    val n = fit(newEmb)
     val sp = oldEmb.sparkSession
     import sp.implicits._
     centroidChamfer(o, n).toDF("cell", "nearest_cell", "shift_d2")
   }
 
-  /** PQ CODEBOOK TRAINING — per-subspace exact-integer Lloyd's, the
-    * companion of [[kmeansFitInt]] for the compressed tier: each of
-    * the `m` subspaces gets its own k-entry codebook trained on that
-    * subspace's `dims/m`-dim slices. Same deterministic contract as
+  /** PQ CODEBOOK TRAINING over a [[withIntVec]] frame — per-subspace
+    * exact-integer Lloyd's, the companion of [[kmeansFitInt]] for the
+    * compressed tier: each of the `m` subspaces gets its own k-entry
+    * codebook trained on that subspace's `dims/m`-dim slices. Same deterministic contract as
     * the coarse trainer (seeds = the k smallest ids' slices, argmin
     * integer L2² with min-cell ties, floorDiv means, emptied codewords
     * keep their previous value, fixed round budget).
@@ -676,18 +653,8 @@ object Ann {
     * subspace, so the trained codebooks drop into the whole PQ stack
     * unchanged.
     */
-  def pqTrainInt(embeddings: DataFrame, idCol: String, vecCol: String,
-                 k: Int, rounds: Int = 2, m: Int = 8,
+  def pqTrainInt(iv: DataFrame, k: Int, rounds: Int = 2, m: Int = 8,
                  dims: Int = 64): Seq[(Long, Seq[Long])] = {
-    val iv = pinIntVec(embeddings, idCol, vecCol)
-    try pqTrainIntPinned(iv, k, rounds, m, dims)
-    finally graft.io.Pins.release(iv)
-  }
-
-  /** [[pqTrainInt]] over an already-pinned [[pinIntVec]] frame —
-    * identical arithmetic, shared-pin form. */
-  def pqTrainIntPinned(iv: DataFrame, k: Int, rounds: Int = 2, m: Int = 8,
-                       dims: Int = 64): Seq[(Long, Seq[Long])] = {
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
     val subDim = dims / m
     val seedVecs = iv.orderBy(col("__id")).limit(k)
@@ -734,28 +701,12 @@ object Ann {
     } finally graft.io.Pins.release(sliced)
   }
 
-  /** IVF-style coarse quantization: assign each vector to the nearest
-    * of `centroids` (small, broadcast), partition by cell. The Spark
-    * plan: broadcast the centroid array, argmin in one pass.
-    */
-  def ivfAssign(embeddings: DataFrame, vecCol: String,
-                centroids: Seq[Seq[Float]]): DataFrame = {
-    val cells = centroids.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("cell"),
-             intDot(intVec(col(vecCol)), typedLit(c.map(quantizeL)))
-               .as("sim"))
-    }
-    // argmax similarity = array_max over (sim, cell) structs
-    embeddings.withColumn("cell",
-      array_max(array(cells.map(s => struct(s.getField("sim").as("sim"),
-                                            s.getField("cell").as("cell"))): _*))
-        .getField("cell"))
-  }
-
-  /** [[ivfAssign]] over ALREADY-INTEGER centroids carrying explicit
-    * cell ids — the oracle-exact form: both engines compute the same
-    * integer dots against the same literal vectors, so assignment (and
-    * the winning dot) is bit-identical. Ties on the dot pick the
+  /** IVF coarse quantization: assign each vector to the max-dot of
+    * `centroids` (small, integer, with explicit cell ids, carried as
+    * plan literals — argmax in one pass, no shuffle). Oracle-exact:
+    * both engines compute the same integer dots against the same
+    * literal vectors, so assignment (and the winning dot) is
+    * bit-identical. Ties on the dot pick the
     * HIGHEST cell id (struct array_max compares (sim, cell)
     * lexicographically); an oracle must fold with `>=` ascending.
     */
@@ -772,11 +723,6 @@ object Ann {
       .drop("__best")
   }
 
-  /** [[ivfTopK]] over integer centroids with explicit cell ids — the
-    * oracle-exact probe: cells ranked by integer dot (ties to the
-    * higher cell id, mirroring [[ivfAssignInt]]'s convention), the
-    * `nprobe` best scanned, candidates exact-scored.
-    */
   /** Driver-side probe-cell ranking — descending query·centroid dot,
     * ties to the HIGHER cell id, mirroring [[ivfAssignInt]]. Every
     * probe path ([[ivfTopKInt]], [[ivfPqTopK]]) and the oracle SQL
@@ -788,6 +734,12 @@ object Ann {
       (id, queryVec.zip(c).map { case (a, b) => a * b }.sum)
     }.sortBy { case (id, sim) => (-sim, -id) }.take(nprobe).map(_._1)
 
+  /** IVF probe over integer centroids with explicit cell ids — the
+    * oracle-exact probe: cells ranked by integer dot ([[rankCells]]),
+    * the `nprobe` best scanned, candidates exact-scored. With the
+    * table partitioned by `cell`, partition pruning turns the probe
+    * into an nprobe/k-cells read.
+    */
   def ivfTopKInt(assigned: DataFrame, idCol: String, vecCol: String,
                  centroids: Seq[(Long, Seq[Long])], queryVec: Seq[Long],
                  k: Int = 10, nprobe: Int = 2): DataFrame = {
@@ -883,6 +835,16 @@ object Ann {
     graft.io.Tables.replacePartitions(spark, path, "cell", cells, kept)
   }
 
+  /** Thrown by [[ivfSplitCell]] for cells that CANNOT split — unknown
+    * id, fewer than 2 rows, or members the trained children do not
+    * separate. Every such failure happens BEFORE the index is touched,
+    * so a balance pass may safely record-and-skip it; any OTHER
+    * exception out of a split (a failed rename mid-swap, a Spark
+    * failure) can mean a half-applied mutation and must PROPAGATE.
+    */
+  final class UnsplittableCellException(msg: String)
+    extends IllegalArgumentException(msg)
+
   /** HOT-CELL SPLIT — the load-balance maintenance a growing index
     * eventually needs: a cell that accumulated a disproportionate
     * share of rows (skewed inserts, drifting data) makes every probe
@@ -906,16 +868,6 @@ object Ann {
     * (kmeansFitInt's k-vectors guard). Single-writer, quiesced-probe
     * assumptions as [[ivfRemoveFromIndex]].
     */
-  /** Thrown by [[ivfSplitCell]] for cells that CANNOT split — unknown
-    * id, fewer than 2 rows, or members the trained children do not
-    * separate. Every such failure happens BEFORE the index is touched,
-    * so a balance pass may safely record-and-skip it; any OTHER
-    * exception out of a split (a failed rename mid-swap, a Spark
-    * failure) can mean a half-applied mutation and must PROPAGATE.
-    */
-  final class UnsplittableCellException(msg: String)
-    extends IllegalArgumentException(msg)
-
   def ivfSplitCell(spark: org.apache.spark.sql.SparkSession, path: String,
                    centroids: Seq[(Long, Seq[Long])], cell: Long,
                    idCol: String, vecCol: String,
@@ -937,8 +889,8 @@ object Ann {
       if (nMembers < 2)
         throw new UnsplittableCellException(
           s"cell $cell cannot split: need at least 2 rows, got $nMembers")
-      val sub = kmeansFitInt(members, idCol, vecCol, k = 2, rounds = rounds,
-                             dims = dims)
+      val sub = withIntVec(members, idCol, vecCol)(
+        kmeansFitInt(_, k = 2, rounds = rounds, dims = dims))
       val base = centroids.map(_._1).max
       val children = sub.zipWithIndex.map { case ((_, cv), i) =>
         (base + 1 + i, cv)
@@ -1507,7 +1459,7 @@ object Ann {
 
   /** Train the SQ8 quantizer: per-dimension (min, max) of the
     * integer-grid vectors — the only state scalar quantization needs
-    * (dims rows, collected like [[ivfTrain]]'s centroids and carried
+    * (dims rows, collected like [[kmeansFitInt]]'s centroids and carried
     * as plan-time literals). One (row × dim) posexplode reduced
     * map-side to dims rows; at scale you train on a sample.
     */
@@ -1595,7 +1547,7 @@ object Ann {
     *
     * Plan shape for 100 TB: pass 1 is one (label, dim) posexplode
     * aggregate (map-side combined, labels × dims rows collected like
-    * [[ivfTrain]]'s centroids); pass 2 scores each row against its own
+    * [[kmeansFitInt]]'s centroids); pass 2 scores each row against its own
     * label's centroid as literal arrays in ONE scan — no joins, no
     * per-row branching beyond the label dispatch; the k² inter-centroid
     * table is driver arithmetic.
@@ -1711,27 +1663,5 @@ object Ann {
       rounds += 1
     }
     out
-  }
-
-  /** IVF probe: rank the centroids against the query on the driver
-    * (centroid list is tiny), scan only the `nprobe` nearest cells,
-    * exact-score the candidates. With the table partitioned by `cell`,
-    * partition pruning turns the probe into an nprobe/k-cells read.
-    */
-  def ivfTopK(assigned: DataFrame, idCol: String, vecCol: String,
-              centroids: Seq[Seq[Float]], queryVec: Seq[Float],
-              k: Int = 10, nprobe: Int = 2): DataFrame = {
-    val qIv = queryVec.map(quantizeL)
-    val probeCells = centroids.zipWithIndex.map { case (c, i) =>
-      val cIv = c.map(quantizeL)
-      (i, qIv.zip(cIv).map { case (a, b) => a * b }.sum)
-    }.sortBy { case (i, sim) => (-sim, i) }.take(nprobe).map(_._1)
-    val q = typedLit(qIv)
-    assigned
-      .filter(col("cell").isInCollection(probeCells))
-      .withColumn("dot", intDot(intVec(col(vecCol)), q))
-      .orderBy(col("dot").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("cell"), col("dot"))
   }
 }

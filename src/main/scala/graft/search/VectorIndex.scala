@@ -186,10 +186,11 @@ object VectorIndex {
     require(nTrain > 0, s"no '$provider' embeddings to index at $path")
     val kC = math.min(nlist.toLong, nTrain).toInt
     val kB = math.min(codebookK.toLong, nTrain).toInt
-    val cents = Ann.kmeansFitInt(train, idCol, vecCol, k = kC,
-                                 rounds = rounds, dims = dims)
-    val books = Ann.pqTrainInt(train, idCol, vecCol, k = kB,
-                               rounds = rounds, m = m, dims = dims)
+    // both trainers read ONE pinned quantization of the slice
+    val (cents, books) = Ann.withIntVec(train, idCol, vecCol) { iv =>
+      (Ann.kmeansFitInt(iv, k = kC, rounds = rounds, dims = dims),
+       Ann.pqTrainInt(iv, k = kB, rounds = rounds, m = m, dims = dims))
+    }
     val meta = Meta(provider, m, dims, nlist, codebookK, samplePct, rounds, cents, books)
     Ann.ivfPqWriteIndex(emb, idCol, vecCol, cents, books, path, m, dims)
     // sidecar LAST — it is the index's commit marker (`exists` keys on
@@ -228,9 +229,9 @@ object VectorIndex {
     val (train, nTrain) = trainingSlice(slice, idCol, meta.nlist,
                                         meta.codebookK, meta.samplePct)
     require(nTrain > 0, "no embeddings to train on")
-    Ann.kmeansFitInt(train, idCol, vecCol,
-                     k = math.min(meta.nlist.toLong, nTrain).toInt,
-                     rounds = meta.rounds, dims = meta.dims)
+    Ann.withIntVec(train, idCol, vecCol)(
+      Ann.kmeansFitInt(_, k = math.min(meta.nlist.toLong, nTrain).toInt,
+                       rounds = meta.rounds, dims = meta.dims))
   }
 
   // ----------------------------------------------------------- reconcile

@@ -231,8 +231,9 @@ class AnnRecallSpec extends SparkSpec {
         ((i % 5).toFloat - 2f) * ((d % 7) + 1) / 10f + i.toFloat / 1000f))
     }
     val cemb = cvecs.toDF("vec_id", "embedding")
-    val cents = Ann.kmeansFitInt(cemb, "vec_id", "embedding", k = 5, rounds = 2)
-    val books = Ann.pqTrainInt(cemb, "vec_id", "embedding", k = 5, rounds = 2)
+    val (cents, books) = Ann.withIntVec(cemb, "vec_id", "embedding") { iv =>
+      (Ann.kmeansFitInt(iv, k = 5, rounds = 2), Ann.pqTrainInt(iv, k = 5, rounds = 2))
+    }
     val indexed = Ann.pqEncodeInt(
         Ann.ivfAssignInt(cemb, "embedding", cents),
         "vec_id", "embedding", books)

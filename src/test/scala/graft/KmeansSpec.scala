@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.search.Ann
@@ -15,6 +16,16 @@ class KmeansSpec extends SparkSpec {
   private def vec(xs: Double*): Seq[Float] =
     (xs ++ Seq.fill(64 - xs.size)(0.0)).map(_.toFloat)
 
+  // the trainers through the production loan (one pinned quantization)
+  private def fit(df: DataFrame, k: Int, rounds: Int,
+                  seedFn: (DataFrame, Int) => Seq[(Long, Seq[Long])] =
+                    Ann.idOrderSeeds): Seq[(Long, Seq[Long])] =
+    Ann.withIntVec(df, "vec_id", "embedding")(
+      Ann.kmeansFitInt(_, k, rounds, seedFn = seedFn))
+
+  private def pq(df: DataFrame, k: Int, rounds: Int): Seq[(Long, Seq[Long])] =
+    Ann.withIntVec(df, "vec_id", "embedding")(Ann.pqTrainInt(_, k, rounds))
+
   test("two planted clusters: centroids land on the exact integer cluster means") {
     // seeds are ids 0 (cluster +1) and 1 (cluster −1); the remaining
     // vectors straddle each seed so the round-1 means are exact
@@ -22,7 +33,7 @@ class KmeansSpec extends SparkSpec {
       (0L, vec(1.0)), (1L, vec(-1.0)),
       (2L, vec(1.2)), (3L, vec(0.8)),
       (4L, vec(-1.2)), (5L, vec(-0.8))).toDF("vec_id", "embedding")
-    val cents = Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 2, rounds = 2)
+    val cents = fit(rows, k = 2, rounds = 2)
     assert(cents.map(_._1) == Seq(0L, 1L))
     // floorDiv((1000+1200+800), 3) = 1000; mirrored for the − cluster
     assert(cents(0)._2(0) == 1000L, cents.toString)
@@ -37,7 +48,7 @@ class KmeansSpec extends SparkSpec {
     val rows = Seq(
       (0L, vec(1.0)), (1L, vec(1.0)), (2L, vec(1.0)), (3L, vec(1.0)))
       .toDF("vec_id", "embedding")
-    val cents = Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 2, rounds = 2)
+    val cents = fit(rows, k = 2, rounds = 2)
     assert(cents(1)._2(0) == 1000L, cents.toString)
     val asg = Ann.assignMinL2Int(
         rows.withColumn("__iv", Ann.intVec(col("embedding"))), "__iv", cents)
@@ -58,17 +69,17 @@ class KmeansSpec extends SparkSpec {
   test("deterministic across runs; k beyond the corpus fails loudly") {
     val rows = (0 until 10).map(i => (i.toLong, vec(i / 10.0)))
       .toDF("vec_id", "embedding")
-    val a = Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 3, rounds = 2)
-    val b = Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 3, rounds = 2)
+    val a = fit(rows, k = 3, rounds = 2)
+    val b = fit(rows, k = 3, rounds = 2)
     assert(a == b)
     val e = intercept[IllegalArgumentException](
-      Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 11, rounds = 1))
+      fit(rows, k = 11, rounds = 1))
     assert(e.getMessage.contains("need at least"))
     // the farthest-point seeder holds the same contract — without its
     // own guard the argmax loop would silently return repeated seeds
     val e2 = intercept[IllegalArgumentException](
-      Ann.kmeansFitInt(rows, "vec_id", "embedding", k = 11, rounds = 1,
-                       seedFn = Ann.farthestPointSeeds))
+      fit(rows, k = 11, rounds = 1,
+          seedFn = Ann.farthestPointSeeds))
     assert(e2.getMessage.contains("need at least"))
   }
 
@@ -79,7 +90,7 @@ class KmeansSpec extends SparkSpec {
       (0L, vec(1.0)), (1L, vec(-1.0)),
       (2L, vec(1.2)), (3L, vec(0.8)),
       (4L, vec(-1.2)), (5L, vec(-0.8))).toDF("vec_id", "embedding")
-    val books = Ann.pqTrainInt(rows, "vec_id", "embedding", k = 2, rounds = 2)
+    val books = pq(rows, k = 2, rounds = 2)
     assert(books.map(_._1) == Seq(0L, 1L))
     assert(books.forall(_._2.size == 64), "entries must compose to full dims")
     // subspace 0: codeword 0 dim 1 = floorDiv(1000+1200+800, 3) = 1000
@@ -99,8 +110,8 @@ class KmeansSpec extends SparkSpec {
   test("pqTrainInt is deterministic across runs") {
     val rows = (0 until 20).map(i => (i.toLong, vec(i / 10.0, (10 - i) / 10.0)))
       .toDF("vec_id", "embedding")
-    val a = Ann.pqTrainInt(rows, "vec_id", "embedding", k = 4, rounds = 2)
-    val b = Ann.pqTrainInt(rows, "vec_id", "embedding", k = 4, rounds = 2)
+    val a = pq(rows, k = 4, rounds = 2)
+    val b = pq(rows, k = 4, rounds = 2)
     assert(a == b)
   }
 
@@ -133,9 +144,9 @@ class KmeansSpec extends SparkSpec {
     }
     val df = pts.toDF("vec_id", "embedding")
     val ivs = pts.map(_._2.map(Ann.quantizeL).toSeq)
-    val idc = Ann.kmeansFitInt(df, "vec_id", "embedding", k = 4, rounds = 2)
-    val fpc = Ann.kmeansFitInt(df, "vec_id", "embedding", k = 4, rounds = 2,
-                               seedFn = Ann.farthestPointSeeds)
+    val idc = fit(df, k = 4, rounds = 2)
+    val fpc = fit(df, k = 4, rounds = 2,
+                  seedFn = Ann.farthestPointSeeds)
     val (fi, ii) = (inertia(ivs, fpc), inertia(ivs, idc))
     info(s"inertia: farthest-point=$fi id-order=$ii")
     assert(fi < ii,
@@ -183,7 +194,7 @@ class KmeansSpec extends SparkSpec {
 
   test("assignMinL2Int matches a brute-force integer L2 argmin on real data") {
     val e = spark.read.parquet(s"$Sf001/embeddings.parquet").limit(100)
-    val cents = Ann.kmeansFitInt(e, "vec_id", "embedding", k = 4, rounds = 2)
+    val cents = fit(e, k = 4, rounds = 2)
     val got = Ann.assignMinL2Int(
         e.withColumn("__iv", Ann.intVec(col("embedding"))), "__iv", cents)
       .select($"vec_id".cast("long"), $"cell").as[(Long, Long)]

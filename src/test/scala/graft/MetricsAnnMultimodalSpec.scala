@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Observation
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.chunk.Chunkers
@@ -84,26 +84,30 @@ class MetricsAnnMultimodalSpec extends SparkSpec {
            s"multi-table found only ${foundMulti intersect plantedIds}")
   }
 
-  test("ivfAssign: every vector lands in a cell, cells partition the corpus") {
+  // IVF centroids = the quantized vectors of ids 0..3, cells 0..3
+  private def firstFourCentroids(e: DataFrame): Seq[(Long, Seq[Long])] =
+    e.filter($"vec_id".isin(0L, 1L, 2L, 3L)).orderBy("vec_id")
+      .select("embedding").collect()
+      .map(_.getSeq[Float](0).map(Ann.quantizeL).toSeq).toSeq
+      .zipWithIndex.map { case (c, i) => (i.toLong, c) }
+
+  test("ivfAssignInt: every vector lands in a cell, cells partition the corpus") {
     val e = spark.read.parquet(s"$Sf001/embeddings.parquet")
-    val centroids = e.filter($"vec_id".isin(0L, 1L, 2L, 3L))
-      .select("embedding").collect().map(_.getSeq[Float](0).toSeq).toSeq
-    val assigned = Ann.ivfAssign(e, "embedding", centroids)
+    val assigned = Ann.ivfAssignInt(e, "embedding", firstFourCentroids(e))
     assert(assigned.filter($"cell".isNull).count() == 0)
-    val cells = assigned.select("cell").distinct().as[Int].collect().toSet
-    assert(cells.subsetOf((0 until 4).toSet) && cells.size > 1)
+    val cells = assigned.select("cell").distinct().as[Long].collect().toSet
+    assert(cells.subsetOf((0L until 4L).toSet) && cells.size > 1)
   }
 
-  test("ivfTopK: probes nprobe cells, finds the query's own vector first") {
+  test("ivfTopKInt: probes nprobe cells, finds the query's own vector first") {
     val e = spark.read.parquet(s"$Sf001/embeddings.parquet")
-    val centroids = e.filter($"vec_id".isin(0L, 1L, 2L, 3L))
-      .select("embedding").collect().map(_.getSeq[Float](0).toSeq).toSeq
-    val assigned = Ann.ivfAssign(e, "embedding", centroids)
-    val q = e.filter($"vec_id" === 0).select("embedding").head().getSeq[Float](0)
-    val hits = Ann.ivfTopK(assigned, "vec_id", "embedding", centroids, q, k = 5)
+    val centroids = firstFourCentroids(e)
+    val assigned = Ann.ivfAssignInt(e, "embedding", centroids)
+    val q = centroids.head._2 // vec_id 0's own quantized vector
+    val hits = Ann.ivfTopKInt(assigned, "vec_id", "embedding", centroids, q, k = 5)
       .collect()
     assert(hits.head.getAs[Long]("vec_id") == 0L) // self is the top hit
-    assert(hits.map(_.getAs[Int]("cell")).toSet.size <= 2) // nprobe bound
+    assert(hits.map(_.getAs[Long]("cell")).toSet.size <= 2) // nprobe bound
   }
 
   test("invalidateCache drops exactly the matching keys (set-op rewrite)") {
@@ -115,16 +119,18 @@ class MetricsAnnMultimodalSpec extends SparkSpec {
     assert(left == Set("k2"))
   }
 
-  test("ivfTrain: k-means centroids give balanced cells and a working probe") {
+  test("kmeansFitInt: trained centroids give balanced cells and a working probe") {
     val e = spark.read.parquet(s"$Sf001/embeddings.parquet")
-    val centroids = Ann.ivfTrain(e, "embedding", k = 8)
-    assert(centroids.size == 8 && centroids.forall(_.size == 64))
-    val assigned = Ann.ivfAssign(e, "embedding", centroids)
-    val cellSizes = assigned.groupBy("cell").count().as[(Int, Long)].collect().toMap
+    val centroids = Ann.withIntVec(e, "vec_id", "embedding")(
+      Ann.kmeansFitInt(_, k = 8, rounds = 2))
+    assert(centroids.size == 8 && centroids.forall(_._2.size == 64))
+    val assigned = Ann.ivfAssignInt(e, "embedding", centroids)
+    val cellSizes = assigned.groupBy("cell").count().as[(Long, Long)].collect().toMap
     assert(cellSizes.size >= 4, s"degenerate clustering: $cellSizes")
     assert(cellSizes.values.max < e.count(), "one cell swallowed the corpus")
-    val q = e.filter($"vec_id" === 3).select("embedding").head().getSeq[Float](0)
-    val hits = Ann.ivfTopK(assigned, "vec_id", "embedding", centroids, q, k = 5, nprobe = 2)
+    val q = e.filter($"vec_id" === 3).select("embedding").head()
+      .getSeq[Float](0).map(Ann.quantizeL).toSeq
+    val hits = Ann.ivfTopKInt(assigned, "vec_id", "embedding", centroids, q, k = 5, nprobe = 2)
     assert(hits.collect().head.getAs[Long]("vec_id") == 3L)
   }
 

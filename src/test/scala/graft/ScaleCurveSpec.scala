@@ -1,12 +1,10 @@
 package graft
 
-import graft.tools.Probe
-
 /** Measured scale evidence for the dedup chain: candidate generation,
   * clustering, and the incremental probe must grow near-linearly in
   * corpus size (the "no all-pairs anywhere" claim, measured instead of
-  * asserted in comments). `tools/Probe scale` runs the same curve at
-  * 500×{1,10,100} docs and commits PROBE_SCALE.md.
+  * asserted in comments). PROBE_SCALE.md records the same curve at
+  * 500×{1,10,100} docs.
   */
 class ScaleCurveSpec extends SparkSpec {
 

@@ -57,8 +57,8 @@ class SkewSpec extends SparkSpec {
   test("skewJoinCurve: all three join variants agree at a small scale") {
     // counts-equality is require()'d inside the curve (naive vs AQE vs
     // salted); timing claims live in the committed PROBE_SKEW.md
-    val pts = graft.tools.Probe.skewJoinCurve(spark, base = 20000L,
-                                              factors = Seq(1), reps = 1)
+    val pts = Probe.skewJoinCurve(spark, base = 20000L,
+                                  factors = Seq(1), reps = 1)
     assert(pts.size == 1 && pts.head.nRows == 20000L)
     // conf restoration: the curve must leave the session's AQE and
     // broadcast settings as it found them

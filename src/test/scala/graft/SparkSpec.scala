@@ -4,9 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for specs — mirrors Verify's session config
-  * (UTC, nanosAsLong for the driver's events table, micros parquet out).
-  */
+/** Shared local session for specs, built by [[graft.Session]]. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf001 = "/root/testdata/sf0.001"
@@ -52,33 +50,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.excludedRules",
-              GraftExtensions.ExcludedOptimizerRules)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-              java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // Pins.release dropping a dead localCheckpoint pin logs a benign
-    // "locally checkpointed ... cannot be recomputed" WARN per pin —
-    // expected-by-contract (same rationale and scope as Bench's
-    // suppression), so quiet that one logger in the test session too.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // ...and WindowExec's single-partition WARN: global windows here
-    // are only ever aggregate-bounded (see Bench's identical note)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    s
-  }
+  /** The production session (`graft.Session`) — every spec runs the
+    * exact config Main, Bench and Verify use — plus a scratch
+    * warehouse dir. */
+  lazy val session: SparkSession = Session.builder(4)
+    .config("spark.sql.warehouse.dir",
+            java.nio.file.Files.createTempDirectory("graft_wh").toString)
+    .getOrCreate()
 }

@@ -524,8 +524,8 @@ class StreamingSpec extends SparkSpec {
     // linearly, state rows stay within the horizon (~2×keys: the newest
     // wave's open sessions + the previous wave's not-yet-finalized
     // ones), never the archive
-    val pts = graft.tools.Probe.sessionStateCurve(spark, keys = 40,
-                                                  eventsPerKey = 5, waves = 4)
+    val pts = Probe.sessionStateCurve(spark, keys = 40,
+                                      eventsPerKey = 5, waves = 4)
     val last = pts.last
     assert(last.totalEvents == 4L * 40 * 5)
     assert(last.emitted >= 2L * 40,
