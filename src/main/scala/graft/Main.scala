@@ -871,24 +871,31 @@ object Main {
   private val StoreTables = Seq("documents", "chunks", "embeddings",
                                 "signatures")
 
-  /** Open a store table the fast way: through the catalog with
-    * bucketing metadata attached when the table is one of the
-    * co-bucketed pair (falls back to a plain read for old stores).
-    * The catalog name carries a PATH hash: `--snapshot=` reads mix a
-    * snapshot root and the live root in one session, and a fixed name
-    * re-registered per open would silently re-resolve a lazily-held
-    * frame from one root to the most recently opened other — distinct
-    * roots must be distinct catalog entries.
+  /** A store table through the session's read handle
+    * ([[graft.io.Tables.handle]]): the same resolved frame on every
+    * call while the table's directory tree is unchanged, re-opened
+    * after any commit, append or outside move touches it. An open
+    * attaches bucketing metadata through the catalog when the table is
+    * one of the co-bucketed pair (a plain read for old stores), so the
+    * catalog DDL runs only on a re-open. The catalog name carries a
+    * PATH hash: `--snapshot=` reads mix a snapshot root and the live
+    * root in one session, and a fixed name re-registered per open
+    * would silently re-resolve a lazily-held frame from one root to
+    * the most recently opened other — distinct roots must be distinct
+    * catalog entries.
     */
-  def openTable(spark: SparkSession, storeDir: String, name: String): DataFrame =
-    if (bucketedTables(name)) {
-      val path = s"$storeDir/$name.parquet"
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(new java.io.File(path).getAbsolutePath.getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      Tables.openBucketed(spark, s"graft_${name}_$pathTag", path,
-                          "chunk_id", StoreBuckets)
-    } else spark.read.parquet(s"$storeDir/$name.parquet")
+  def openTable(spark: SparkSession, storeDir: String, name: String): DataFrame = {
+    val path = s"$storeDir/$name.parquet"
+    Tables.handle(spark, path) {
+      if (bucketedTables(name)) {
+        val pathTag = java.security.MessageDigest.getInstance("MD5")
+          .digest(new java.io.File(path).getAbsolutePath.getBytes("UTF-8"))
+          .take(4).map("%02x".format(_)).mkString
+        Tables.openBucketed(spark, s"graft_${name}_$pathTag", path,
+                            "chunk_id", StoreBuckets)
+      } else spark.read.parquet(path)
+    }
+  }
 
   private[graft] def writeTable(spark: SparkSession, updates: DataFrame, storeDir: String,
                          name: String, keys: Seq[String],
@@ -2224,7 +2231,7 @@ object Main {
       .as[String].head()
     val f = new java.io.File(s"$storeDir/search_cache.parquet")
     val cache =
-      if (f.exists()) spark.read.parquet(f.toString)
+      if (f.exists()) Tables.read(spark, f.toString)
       else Seq.empty[(String, String, String, Double)]
         .toDF("cache_key", "embedding_provider", "chunk_id", "score")
     val (res0, hit) = Search.cachedSearch(cache, key, () =>
@@ -2436,7 +2443,7 @@ object Main {
     val meta = VectorIndex.readMeta(path)
     val qv = Embedding.embedQuery(query, meta.provider).toSeq
       .map(graft.search.Ann.quantizeL)
-    VectorIndex.topK(spark, path, "chunk_id", "embedding", qv, k, nprobe)
+    VectorIndex.topK(spark, path, meta, "chunk_id", "embedding", qv, k, nprobe)
       .join(openTable(spark, storeDir, "chunks")
               .select(col("chunk_id"), col("content")), Seq("chunk_id"))
       .orderBy(col("d2").asc, col("chunk_id"))
@@ -2490,7 +2497,7 @@ object Main {
       .collect().groupBy(_.getString(0))
       .view.mapValues(_.map(_.getString(1)).toSet).toMap
     val perQuery = queries.map { case (qid, qv) =>
-      val stored = VectorIndex.topK(spark, path, "chunk_id", "embedding",
+      val stored = VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
                                     qv, k, nprobe)
         .select(col("chunk_id"))
         .collect().map(_.getString(0)).toSet
@@ -2611,7 +2618,7 @@ object Main {
         val meta = VectorIndex.readMeta(path)
         val qv = Embedding.embedQuery(query, meta.provider).toSeq
           .map(Ann.quantizeL)
-        val dense = VectorIndex.topK(spark, path, "chunk_id", "embedding",
+        val dense = VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
                                      qv, k, nprobe)
           .withColumn("rank", row_number().over(
             Window.orderBy(col("d2").asc, col("chunk_id"))).cast("long"))

@@ -1,5 +1,10 @@
 package graft.io
 
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -231,6 +236,79 @@ object Tables {
           LOCATION '$path'""")
     spark.table(table)
   }
+
+  // ------------------------------------------------------- read handles
+
+  private type Stamp = Seq[(String, AnyRef, Long, Long)]
+  private final case class Handle(stamp: Stamp, df: DataFrame)
+
+  /** Open handles per session. Keyed by session identity, so a frame
+    * never crosses sessions, and a session's map is dropped when its
+    * context ends: the frames reference their session, so a weak-keyed
+    * map would never free a stopped session's entry.
+    */
+  private val handles =
+    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, Handle]]()
+
+  private def handlesOf(spark: SparkSession) =
+    handles.computeIfAbsent(spark, s => {
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          handles.remove(s)
+      })
+      new ConcurrentHashMap[String, Handle]()
+    })
+
+  /** Driver-side fingerprint of the tree at `path`: relative name, file
+    * key, mtime and size of every entry. A few hundred `stat`s, no Spark
+    * job. None when the path is missing or changes under the walk.
+    */
+  private def stamp(path: String): Option[Stamp] = {
+    val root = Paths.get(path)
+    val out = Vector.newBuilder[(String, AnyRef, Long, Long)]
+    def add(p: Path, a: BasicFileAttributes): FileVisitResult = {
+      out += ((root.relativize(p).toString, a.fileKey,
+               a.lastModifiedTime.to(TimeUnit.NANOSECONDS), a.size))
+      FileVisitResult.CONTINUE
+    }
+    try {
+      Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+        override def preVisitDirectory(d: Path, a: BasicFileAttributes) = add(d, a)
+        override def visitFile(f: Path, a: BasicFileAttributes) = add(f, a)
+      })
+      Some(out.result().sortBy(_._1))
+    } catch { case _: java.io.IOException => None }
+  }
+
+  /** The session's read handle on `path`: the frame `open` resolved, as
+    * long as the fingerprint of the tree at `path` is unchanged. Any
+    * change to an entry re-opens, so a handle sees exactly the rows a
+    * fresh read sees. A reuse skips `open`'s schema inference, file
+    * listing and catalog DDL, and starts no Spark job. The fingerprint
+    * is taken before `open`: a write racing the open costs a re-open
+    * on the next call, never a stale frame. Every caller of one path
+    * passes an equivalent `open`.
+    */
+  def handle(spark: SparkSession, path: String)(open: => DataFrame): DataFrame = {
+    if (spark.sparkContext.isStopped) return open
+    val key = new java.io.File(path).getAbsolutePath
+    val now = stamp(key)
+    val mine = handlesOf(spark)
+    Option(mine.get(key)) match {
+      case Some(h) if now.contains(h.stamp) => h.df
+      case _ =>
+        val df = open
+        now match {
+          case Some(s) => mine.put(key, Handle(s, df))
+          case None => mine.remove(key)
+        }
+        df
+    }
+  }
+
+  /** [[handle]] on a plain parquet read of `path`. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    handle(spark, path)(spark.read.parquet(path))
 
   // ------------------------------------------------------- JSONL shards
 

@@ -1182,6 +1182,18 @@ object Ann {
       pqEncodeInt(ivfAssignInt(embeddings, vecCol, centroids),
                   idCol, vecCol, codebooks, m, dims), path)
 
+  /** The session's read handle on a stored index
+    * ([[graft.io.Tables.handle]]); an open checks for a cell first,
+    * since an emptied index (sidecar only) has no schema to infer.
+    */
+  private def storedIndex(spark: org.apache.spark.sql.SparkSession,
+                          path: String): DataFrame =
+    graft.io.Tables.handle(spark, path) {
+      require(indexHasCells(path),
+        s"vector index at $path has no cells (empty store?) — nothing to probe")
+      spark.read.parquet(path)
+    }
+
   /** Probe a STORED IVF-PQ index with the scan/fetch split that makes
     * the plan right at 100 TB — unlike the in-memory [[ivfPqTopK]]
     * (where the vector column is already resident), the stored probe
@@ -1205,7 +1217,7 @@ object Ann {
                       k: Int = 10, nprobe: Int = 2, rerankFactor: Int = 3,
                       m: Int = 8, dims: Int = 64): DataFrame = {
     val probeCells = rankCells(centroids, queryVec, nprobe)
-    def pruned = spark.read.parquet(path)
+    val pruned = storedIndex(spark, path)
       .withColumn("cell", col("cell").cast("long"))
       .filter(col("cell").isInCollection(probeCells))
     val adcTop = pruned
@@ -1253,7 +1265,7 @@ object Ann {
       (qid, rankCells(centroids, qv, nprobe))
     }
     val allCells = probeSets.flatMap(_._2).distinct.sorted
-    def pruned = spark.read.parquet(path)
+    val pruned = storedIndex(spark, path)
       .withColumn("cell", col("cell").cast("long"))
       .filter(col("cell").isInCollection(allCells))
     val qdf = queries.toDF("query_id", "__qv")

@@ -3,6 +3,8 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Tables
+
 /** Search operators (reference Q1–Q5 + F14, SURVEY.md §2.11).
   *
   * The reference's kNN is an ES `script_score` brute-force scan —
@@ -298,7 +300,7 @@ object Search {
     require(norms.exists(),
       s"no norms sidecar at $norms — rebuild the index with writePostings")
     val nBuckets = postingsNBuckets(path)
-    val normsDf = spark.read.parquet(norms.toString)
+    val normsDf = Tables.read(spark, norms.toString)
     val statsNT = normsDf.agg(count(lit(1)).as("__N"), sum(col("dl")).as("__T"))
     if (postingsIsEmpty(path)) {
       // emptied index: nothing can score — same (id, dl, score) shape
@@ -311,7 +313,7 @@ object Search {
                        StructField("score", LongType))))
     }
     val buckets = qts.map(termBucketOf(_, nBuckets)).distinct
-    val pruned = spark.read.parquet(path)
+    val pruned = Tables.read(spark, path)
       .filter(col("tb").isInCollection(buckets))
       .filter(col("tok").isin(qts: _*))
     val tfAggs = qts.zipWithIndex.map { case (qt, i) =>
@@ -823,7 +825,7 @@ object Search {
     }
     val terms = phraseTerms(phrase)
     val buckets = terms.distinct.map(termBucketOf(_, nBuckets)).distinct
-    val postings = spark.read.parquet(path)
+    val postings = Tables.read(spark, path)
       .filter(col("tb").isInCollection(buckets))
     anchorVotes(postings, idCol, terms)
   }
@@ -852,7 +854,7 @@ object Search {
         StructType(Seq(StructField(idCol, idType))))
     }
     val buckets = terms.map(termBucketOf(_, nBuckets)).distinct
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .filter(col("tb").isInCollection(buckets) &&
               col("tok").isInCollection(terms))
       .select(col(idCol)).distinct()

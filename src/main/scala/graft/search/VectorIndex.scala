@@ -326,20 +326,17 @@ object VectorIndex {
 
   // --------------------------------------------------------------- probe
 
-  /** Serve a top-k probe from the stored index under its own sidecar
-    * quantizers — the [[Ann.ivfPqTopKStored]] scan/fetch split
+  /** Serve a top-k probe from the stored index under the quantizers of
+    * its sidecar `meta` (the caller's [[readMeta]] of `path`, parsed
+    * once per request) — the [[Ann.ivfPqTopKStored]] scan/fetch split
     * (partition-pruned cells, codes-only ADC scan, constant-size
-    * exact re-rank). The caller quantizes the query onto the integer
-    * grid ([[Ann.quantizeL]]).
+    * exact re-rank). An index with no cells fails loudly. The caller
+    * quantizes the query onto the integer grid ([[Ann.quantizeL]]).
     */
-  def topK(spark: SparkSession, path: String, idCol: String, vecCol: String,
-           queryVec: Seq[Long], k: Int = 10, nprobe: Int = 2,
-           rerankFactor: Int = 3): DataFrame = {
-    val meta = readMeta(path)
-    require(hasCells(path),
-      s"vector index at $path has no cells (empty store?) — nothing to probe")
+  def topK(spark: SparkSession, path: String, meta: Meta, idCol: String,
+           vecCol: String, queryVec: Seq[Long], k: Int = 10, nprobe: Int = 2,
+           rerankFactor: Int = 3): DataFrame =
     Ann.ivfPqTopKStored(spark, path, idCol, vecCol, meta.centroids,
                         meta.codebooks, queryVec, k, nprobe, rerankFactor,
                         meta.m, meta.dims)
-  }
 }

@@ -100,15 +100,15 @@ class VectorIndexSpec extends SparkSpec {
     assert(indexIds(path) == ids.map(i => s"c$i").toSet)
     // healed index answers exactly as a fresh build over the slice
     val q = vec(3L).map(Ann.quantizeL)
-    val healed = VectorIndex.topK(spark, path, "chunk_id", "embedding",
-                                  q, k = 5, nprobe = 5)
+    val healed = VectorIndex.topK(spark, path, VectorIndex.readMeta(path),
+                                  "chunk_id", "embedding", q, k = 5, nprobe = 5)
       .collect().map(_.toSeq).toSeq
     val fresh = Files.createTempDirectory("graft_vidx_fresh").toString + "/vector.idx"
     Ann.ivfPqWriteIndex(slice(ids), "chunk_id", "embedding", cents, cents,
                         fresh, m, dims)
     VectorIndex.writeMeta(fresh, meta)
-    val rebuilt = VectorIndex.topK(spark, fresh, "chunk_id", "embedding",
-                                   q, k = 5, nprobe = 5)
+    val rebuilt = VectorIndex.topK(spark, fresh, VectorIndex.readMeta(fresh),
+                                   "chunk_id", "embedding", q, k = 5, nprobe = 5)
       .collect().map(_.toSeq).toSeq
     assert(healed == rebuilt)
   }
@@ -124,8 +124,8 @@ class VectorIndexSpec extends SparkSpec {
     // probing an emptied index fails loudly rather than returning a
     // silent empty set from a schema-less read
     intercept[IllegalArgumentException](
-      VectorIndex.topK(spark, path, "chunk_id", "embedding",
-                       vec(0L).map(Ann.quantizeL), k = 3))
+      VectorIndex.topK(spark, path, VectorIndex.readMeta(path), "chunk_id",
+                       "embedding", vec(0L).map(Ann.quantizeL), k = 3))
     // the store refills: reconcile rebuilds from the no-cells state
     val (a2, r2) = VectorIndex.reconcile(spark, path, slice(ids),
                                          "chunk_id", "embedding")
