@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Caller-owned lifecycle for `localCheckpoint` pins.
@@ -56,4 +56,33 @@ object Pins {
   def sweepAll(spark: SparkSession, blocking: Boolean = false): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking))
+
+  /** `pinned` with each pin's size and row-count estimates capped at
+    * `Long.MaxValue`. A checkpoint keeps the estimate of the plan it
+    * replaced, and a join's estimate is the product of its children's,
+    * so a loop that pins each round and joins the pin several times
+    * multiplies the estimate's bit length every round:
+    * `Dedup.connectedComponents` (four joins on the last pin a round)
+    * spent minutes in those BigInt products, inside each round's
+    * checkpoint. No plan choice changes: an estimate past
+    * `Long.MaxValue` is past every broadcast threshold either way.
+    */
+  def capStats(pinned: DataFrame): DataFrame = {
+    val spark = pinned.sparkSession.asInstanceOf[classic.SparkSession]
+    val cap = BigInt(Long.MaxValue)
+    // built directly, not through `transform`: the copy differs from
+    // the pin only in its second parameter list, which case-class
+    // equality ignores, so `transform` would keep the original node
+    val capped = pinned.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val s = lr.computeStats()
+        lr.copy()(spark,
+                  Some(s.copy(sizeInBytes = s.sizeInBytes.min(cap),
+                              rowCount = s.rowCount.map(_.min(cap)))),
+                  Some(lr.constraints))
+      case p => throw new IllegalArgumentException(
+        s"capStats expects a checkpointed frame, got ${p.nodeName}")
+    }
+    new classic.Dataset[Row](spark, capped, Encoders.row(pinned.schema))
+  }
 }

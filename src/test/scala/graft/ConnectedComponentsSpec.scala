@@ -49,6 +49,20 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got.size == 64 && got.values.toSet == Set("v01"))
   }
 
+  test("a round's pin keeps its size estimate within Long.MaxValue") {
+    // each round joins the last pin four times and the next pin
+    // inherits that estimate; uncapped, the 64-node chain's 6 rounds
+    // leave an estimate thousands of bits long
+    val chain = (1 to 63).map(i => (f"v$i%02d", f"v${i + 1}%02d"))
+    val labels = Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b")
+    val sizes = labels.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.computeStats().sizeInBytes
+    }
+    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
+    graft.io.Pins.release(labels)
+  }
+
   test("maxIters guard: a long chain with 1 round fails loudly") {
     val chain = (1 to 20).map(i => (f"v$i%02d", f"v${i + 1}%02d"))
     val e = intercept[IllegalArgumentException](labelsOf(chain, maxIters = 1))
