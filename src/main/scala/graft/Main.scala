@@ -380,27 +380,28 @@ object Main {
     // cross-table state — the .store lease is the transaction boundary
     // Snapshots.create/restore serialize against
     Tables.withTableLock(s"$storeDir/.store") {
-      ingestBatchInner(spark, docsIn, storeDir, providerName, now, streaming)
+      // everything the batch pins (the tombstone id set, the stale-chunk
+      // capture, the dedup clustering's per-round label tables) is its
+      // scratch, freed on return AND on failure — a long-lived session
+      // (the --follow consumer) must not accumulate pins per batch
+      graft.io.Pins.sweepingNew(spark) {
+        // One row per doc_id: the same file delivered twice in one batch
+        // (same bytes + filename under two paths → one id; rows identical
+        // since `now` is batch-constant) is ONE upload. Without this the
+        // keep-one window sees the id twice and flags one row !keep — the
+        // doc lands in dupIds and prunes ITS OWN chunks from the commit.
+        val docsAll = docsIn.dropDuplicates("doc_id").cache()
+        try ingestBatchInner(spark, docsAll, storeDir, providerName, now, streaming)
+        finally docsAll.unpersist()
+      }
     }
 
-  private def ingestBatchInner(spark: SparkSession, docsIn: DataFrame,
+  private def ingestBatchInner(spark: SparkSession, docsAll: DataFrame,
                                storeDir: String, providerName: String,
                                now: Timestamp,
                                streaming: Boolean): IngestReport = {
     import spark.implicits._
 
-    // One row per doc_id: the same file delivered twice in one batch
-    // (same bytes + filename under two paths → one id; rows identical
-    // since `now` is batch-constant) is ONE upload. Without this the
-    // keep-one window sees the id twice and flags one row !keep — the
-    // doc lands in dupIds and prunes ITS OWN chunks from the commit.
-    val docsAll = docsIn.dropDuplicates("doc_id").cache()
-    // storage snapshot: everything pinned after this point (the
-    // tombstone id set, the stale-chunk capture, the dedup clustering's
-    // per-round label tables) is this run's scratch and is freed before
-    // returning — a long-lived session (the --follow consumer) must not
-    // accumulate pinned tables per ingest.
-    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // Trash-restore preamble BEFORE any exists() decision below: a
     // crashed prior commit parks a table's ONLY copy in .trash, and
     // every gate keyed on existence would otherwise misread the window
@@ -484,8 +485,8 @@ object Main {
       .select($"doc_id", $"comp", $"keep")
       // six downstream actions consume these flags (both prunes,
       // docsOut, demotion, signature write) — pin once or each re-runs
-      // the LSH aggregation + stored-signature probe; freed by the
-      // pinnedBefore sweep below
+      // the LSH aggregation + stored-signature probe; freed by
+      // ingestBatch's sweep
       .localCheckpoint(true)
     val kept = ok.join(dupFlags.filter($"keep"), Seq("doc_id"), "left_semi")
     // a doc KEPT by an earlier run can be demoted to duplicate when a
@@ -601,8 +602,8 @@ object Main {
             .join(ci, Seq("chunk_id"), "left_semi")
             .select($"chunk_id", $"cell")
             .localCheckpoint(true)
-          try search.Ann.ivfPqRemoveFromIndex(spark, vecPath, idxRows,
-                                              "chunk_id")
+          try search.Ann.ivfRemoveFromIndex(spark, vecPath, idxRows,
+                                            "chunk_id")
           finally graft.io.Pins.release(idxRows)
         }
       }
@@ -833,27 +834,11 @@ object Main {
       .toDF("stage", "metric", "value")
       .withColumn("run_at", lit(now))
     appendRunlogFrame(storeDir, runLog)
-    if (streaming) {
-      // unpersist() does not drop a localCheckpoint pin — release at
-      // the RDD level (the pinnedBefore sweep below would catch these
-      // anyway; explicit for clarity)
-      graft.io.Pins.release(chunksObserved)
-      graft.io.Pins.release(embedded)
-    }
-    docsAll.unpersist()
-    // free this run's dedup scratch pins (see snapshot above)
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => pinnedBefore.contains(id) }
-      .values.foreach(_.unpersist(blocking = false))
     IngestReport(nDocs, nFailed,
                  obs.getOrElse("n_chunks", 0L).toString.toLong,
                  obs.getOrElse("n_embedded", 0L).toString.toLong, obs)
   }
 
-  /** Upsert-write one store table: existing ∪ updates → latest per key
-    * → write NEW snapshot, then swap directories (the local-fs stand-in
-    * for a table-format commit; at scale this is Delta/Iceberg's job).
-    */
   /** Bucketing layout for the two hot store tables: chunks and
     * embeddings are co-bucketed by `chunk_id` so the cache probe (J1)
     * and reassembly (J3) joins between PERSISTED tables plan without a
@@ -897,48 +882,38 @@ object Main {
     }
   }
 
+  /** Upsert-write one store table: existing ∪ updates → latest per key
+    * → write NEW snapshot, then [[graft.io.Tables.swap]] it in (the
+    * local-fs stand-in for a table-format commit; at scale this is
+    * Delta/Iceberg's job).
+    */
   private[graft] def writeTable(spark: SparkSession, updates: DataFrame, storeDir: String,
                          name: String, keys: Seq[String],
                          version: Seq[org.apache.spark.sql.Column],
                          prune: DataFrame => DataFrame = identity): Unit = {
     val path = new java.io.File(s"$storeDir/$name.parquet")
-    val tmp = new java.io.File(s"$storeDir/$name.parquet.tmp")
-    val trash = new java.io.File(s"$storeDir/$name.parquet.trash")
-    import Tables.rmTree
     // the WHOLE read-merge-swap runs under the table lease: a second
     // writer that merged against the pre-commit snapshot would discard
     // this writer's rows at its own swap (the §7.4.3 race — now an
     // enforced invariant, see Tables.withTableLock + ConcurrencySpec)
     Tables.withTableLock(path.toString) {
-    // recovery from a commit that died mid-swap: if the live dir is
-    // gone, the aside-renamed old snapshot in .trash is the only
-    // COMPLETE copy — restore it (a leftover .tmp may be half-written
-    // and is never trusted). Only then discard leftovers.
-    if (!path.exists() && trash.exists())
-      require(trash.renameTo(path), s"recovering $name from trash failed")
-    rmTree(tmp); rmTree(trash)
-    val merged =
-      if (path.exists())
-        Tables.upsert(spark.read.parquet(path.toString), updates, keys, version)
-      else updates
-    val out = prune(merged)
-    if (bucketedTables(name))
-      Tables.writeBucketed(out, tmp.toString, "chunk_id", StoreBuckets)
-    else out.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // swap-by-rename commit ordering: the live table is renamed aside,
-    // not deleted, before the new snapshot takes its place — a crash at
-    // any point leaves a complete old or new snapshot on disk, and the
-    // recovery above knows which one to trust. Renames are CHECKED: a
-    // silently failed swap would drop the new snapshot on the floor.
-    graft.io.Faults.point("writeTable.after-tmp")
-    if (path.exists())
-      require(path.renameTo(trash), s"aside-rename of live $name failed")
-    graft.io.Faults.point("writeTable.after-aside")
-    require(tmp.renameTo(path), s"commit rename of $name failed")
-    graft.io.Faults.point("writeTable.after-commit")
-    rmTree(trash)
+      Tables.swap(path, "writeTable") { tmp =>
+        val merged =
+          if (path.exists())
+            Tables.upsert(spark.read.parquet(path.toString), updates, keys, version)
+          else updates
+        writeStoreTable(prune(merged), name, tmp)
+      }
     }
   }
+
+  /** Write `df` as store table `name` at `path`: the co-bucketed pair
+    * keeps its bucket layout, every other table is plain parquet.
+    */
+  private def writeStoreTable(df: DataFrame, name: String, path: String): Unit =
+    if (bucketedTables(name))
+      Tables.writeBucketed(df, path, "chunk_id", StoreBuckets)
+    else df.write.mode(SaveMode.Overwrite).parquet(path)
 
   // ------------------------------------------------------------------ export
 
@@ -1032,7 +1007,7 @@ object Main {
     val merges = graft.text.TextStats.bpeTrain(
       openTable(spark, storeDir, "chunks").select(col("content")),
       "content", rounds)
-    commitArtifact(path) { tmp =>
+    Tables.commitArtifact(path) { tmp =>
       merges.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     val n = spark.read.parquet(path).count()
@@ -1040,19 +1015,10 @@ object Main {
     n
   }
 
-  /** The shared artifact commit protocol, now hosted in
-    * [[graft.io.Tables.commitArtifact]] so non-Main writers (the bench
-    * fixtures in queries/Pipeline) land artifacts under the same
-    * tmp + aside-rename + checked-renames discipline.
-    */
-  private def commitArtifact(path: String)(writeTmp: String => Unit): Unit =
-    Tables.commitArtifact(path)(writeTmp)
-
-  /** A stored artifact frame with the same restore-from-trash preamble
-    * every artifact READER needs (storedMerges' contract): a writer
-    * that died between aside-rename and commit parked the only copy in
-    * `.trash`, and a bare exists() check would silently report "no
-    * artifact".
+  /** A stored artifact frame, read after [[Tables.restoreFromTrash]]:
+    * a writer that died between aside-rename and commit parked the
+    * only copy in `.trash`, and a bare exists() check would silently
+    * report "no artifact".
     */
   private def storedArtifact(spark: SparkSession, storeDir: String,
                              name: String): Option[DataFrame] = {
@@ -1088,7 +1054,7 @@ object Main {
     val model = graft.learn.Learn.boostTrainModel(
       modelFeatures(spark, storeDir),
       Seq("chunk_number", "total_chunks"), "n_chars", rounds)
-    commitArtifact(path) { tmp =>
+    Tables.commitArtifact(path) { tmp =>
       model.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
     appendRunlog(spark, storeDir, "train", Seq("rounds" -> rounds.toLong))
@@ -1129,15 +1095,12 @@ object Main {
     */
   private def storedMerges(spark: SparkSession, storeDir: String)
       : Option[Seq[(String, String)]] = {
-    val f = new java.io.File(storeDir, "tokenizer.parquet")
-    // a trainer that died between aside-rename and commit parked the
-    // only merge table in .trash; a bare exists() check here would
-    // silently demote every export to the lexer fallback
-    if (!Tables.restoreFromTrash(f.toString)) None
-    else Some(spark.read.parquet(f.toString)
-      .orderBy(col("round"))
-      .select(col("lft"), col("rgt"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq)
+    // storedArtifact restores a merge table a crashed trainer parked;
+    // a bare exists() check would demote every export to the lexer
+    storedArtifact(spark, storeDir, "tokenizer.parquet").map(
+      _.orderBy(col("round"))
+        .select(col("lft"), col("rgt"))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq)
   }
 
   /** Per-chunk `n_tokens` under the store's tokenizer tier: the
@@ -1596,10 +1559,7 @@ object Main {
     * (withTableLock is deliberately non-reentrant).
     */
   private def appendRunlogLocked(path: String, frame: DataFrame): Unit = {
-    val dir = new java.io.File(path)
-    val trash = new java.io.File(s"$path.trash")
-    if (!dir.exists() && trash.exists())
-      require(trash.renameTo(dir), s"recovering $path from trash failed")
+    Tables.recover(new java.io.File(path))
     frame.write.mode(SaveMode.Append).parquet(path)
   }
 
@@ -1754,15 +1714,12 @@ object Main {
         .flatMap { trash =>
           val live = new java.io.File(
             storeDir, trash.getName.stripSuffix(".trash"))
-          if (live.exists()) None
-          else Tables.withTableLock(live.toString) {
-            if (!live.exists() && trash.exists()) {
-              require(trash.renameTo(live),
-                s"restoring ${live.getName} from trash failed")
-              Some(s"""{"check":"table_restored_from_trash","count":1,""" +
-                s""""violation":false,"table":"${live.getName}"$tag}""")
-            } else None
+          val restored = !live.exists() && Tables.withTableLock(live.toString) {
+            !live.exists() && Tables.recover(live)
           }
+          if (!restored) None
+          else Some(s"""{"check":"table_restored_from_trash","count":1,""" +
+            s""""violation":false,"table":"${live.getName}"$tag}""")
         }.toSeq
     } ++ {
       // STALE asides — live AND trash both present, a writer that
@@ -1989,40 +1946,18 @@ object Main {
 
   private def runFsckRepairInner(spark: SparkSession,
                                  storeDir: String): Seq[String] = {
-    def swapRewrite(name: String, keep: DataFrame): Unit = {
-      val f = new java.io.File(s"$storeDir/$name.parquet")
-      val tmp = new java.io.File(s"$storeDir/$name.parquet.tmp")
-      val trash = new java.io.File(s"$storeDir/$name.parquet.trash")
-      Tables.rmTree(tmp); Tables.rmTree(trash)
-      // the co-bucketed pair keeps its layout through the repair —
-      // a plain rewrite would silently demote J1/J3 to shuffle joins
-      if (bucketedTables(name))
-        Tables.writeBucketed(keep, tmp.toString, "chunk_id", StoreBuckets)
-      else keep.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      // writeTable's commit protocol, not delete-then-rename: the live
-      // table goes ASIDE (.trash) before the new snapshot lands, so a
-      // crash at any point leaves a complete snapshot that writeTable's
-      // recovery preamble knows how to restore
-      graft.io.Faults.point("fsckRepair.after-tmp")
-      require(f.renameTo(trash), s"fsck-repair aside-rename of $name failed")
-      graft.io.Faults.point("fsckRepair.after-aside")
-      require(tmp.renameTo(f), s"fsck-repair swap of $name failed")
-      graft.io.Faults.point("fsckRepair.after-commit")
-      Tables.rmTree(trash)
-    }
     def tblFile(name: String) = new java.io.File(s"$storeDir/$name.parquet")
+    // writeTable's commit, not delete-then-rename: a crash at any point
+    // leaves a complete snapshot, and the co-bucketed pair keeps its
+    // layout (a plain rewrite would demote J1/J3 to shuffle joins)
+    def swapRewrite(name: String, keep: DataFrame): Unit =
+      Tables.swap(tblFile(name), "fsckRepair")(writeStoreTable(keep, name, _))
     // the repair tool is what a user runs after a crash: restore any
     // table a died swap (an earlier repair's included) left parked in
-    // .trash before auditing — the same preamble writeTable runs
+    // .trash before auditing
     for (name <- Seq("documents", "chunks", "embeddings", "signatures",
-                     "tokenizer", "runlog")) {
-      val f = tblFile(name)
-      val trash = new java.io.File(s"${f.getPath}.trash")
-      if (!f.exists() && trash.exists()) Tables.withTableLock(f.toString) {
-        if (!f.exists() && trash.exists())
-          require(trash.renameTo(f), s"recovering $name from trash failed")
-      }
-    }
+                     "tokenizer", "runlog"))
+      Tables.restoreFromTrash(tblFile(name).toString)
     val out = scala.collection.mutable.ArrayBuffer[String]()
     // stale-aside sweep (the audit's `stale_aside` drift → zero):
     // restore-from-trash above handled the live-missing case; what
@@ -2107,7 +2042,7 @@ object Main {
     if (VectorIndex.exists(storeDir)) {
       val p = VectorIndex.indexPath(storeDir)
       val (b, a) = Tables.withTableLock(p) {
-        graft.search.Ann.ivfCompactIndex(spark, p, targetBytes)
+        Tables.compactPartitions(spark, p, "cell", targetBytes)
       }
       report("vector.idx", b, a)
     }
@@ -2211,6 +2146,9 @@ object Main {
     Tables.rmTree(tmp)
     Search.invalidateCache(cache, invalid)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    // delete-then-rename, not Tables.swap: a parked cache aside is one
+    // fsck's trash restore would bring back, and knn_cached would then
+    // serve the stale rows this invalidation dropped
     Tables.rmTree(f)
     require(tmp.renameTo(f), "search-cache invalidation swap failed")
   }
@@ -2404,14 +2342,14 @@ object Main {
     */
   def runBalanceVectorIndex(spark: SparkSession, storeDir: String,
                             maxRows: Long): Seq[String] = {
-    import graft.search.{Ann, VectorIndex}
+    import graft.search.VectorIndex
     val path = VectorIndex.indexPath(storeDir)
     val report = VectorIndex.balance(spark, path, maxRows,
                                      "chunk_id", "embedding")
     val (fBefore, fAfter) =
       if (VectorIndex.hasCells(path))
-        graft.io.Tables.withTableLock(path) {
-          Ann.ivfPqCompactIndex(spark, path)
+        Tables.withTableLock(path) {
+          Tables.compactPartitions(spark, path, "cell")
         }
       else (0, 0)
     report.map { a =>

@@ -202,6 +202,8 @@ object Snapshots {
           parked.foreach { e =>
             val live = new File(root, e.getName)
             if (live.exists()) Tables.rmTree(live)
+            // the rollback's own park/relink moves whole store entries
+            // as one unit under every lease — not a Tables.swap
             require(e.renameTo(live), s"parking back $e failed")
           }
           Tables.rmTree(trash)
@@ -313,7 +315,7 @@ object Snapshots {
         // (fsck preamble, or the next snapshot op) rolls forward
         Files.write(new File(trash, IntentFile).toPath, name.getBytes("UTF-8"))
         Faults.point("snapshot.restore.after-intent")
-        current.foreach { e =>
+        current.foreach { e => // parks the entry for rollback, not a Tables.swap
           require(e.renameTo(new File(trash, e.getName)),
             s"parking $e for rollback failed")
         }

@@ -321,26 +321,7 @@ object Tables {
                  codec: String = "gzip"): Unit =
     df.write.mode("overwrite").option("compression", codec).json(path)
 
-  /** Compact a parquet/JSONL directory's shards to ~`targetBytes` files
-    * — the operational tool a 100 TB store needs on two fronts: a
-    * too-many-small-files table (each file is a task + a namenode
-    * entry) and too-few-giant-gzip-JSONL shards (gzip is unsplittable,
-    * so shard count caps read parallelism). Reads the table, sizes the
-    * shard count from the CURRENT on-disk bytes (compressed — what the
-    * next reader actually pays for), rewrites via `repartition`, and
-    * lands it with the same aside-rename swap commit as the store
-    * tables (crash leaves a complete old or new snapshot, never a
-    * mix). Returns (filesBefore, filesAfter).
-    *
-    * NOTE: a repartition round-trip drops bucketing metadata — the
-    * co-bucketed store tables compact through their own bucketed
-    * writer instead ([[writeBucketed]] already writes one file per
-    * bucket); this tool is for the export/ingest shard dirs.
-    */
-  /** Recursive delete — the one copy every swap-commit path
-    * ([[compact]], the store writers, the ANN index maintenance)
-    * shares.
-    */
+  /** Recursive delete — the one copy every swap-commit path shares. */
   def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete()
   }
@@ -504,19 +485,81 @@ object Tables {
     throw new IllegalStateException("unreachable")
   }
 
+  // ------------------------------------------------------- swap commit
+
+  /** `live`'s sibling `<name><suffix>`, or the dot-prefixed
+    * `.<name><suffix>` for a partition directory — hidden from
+    * partition discovery, so a crash can never surface a pseudo-
+    * partition.
+    */
+  private def sibling(live: java.io.File, hidden: Boolean,
+                      suffix: String): java.io.File =
+    new java.io.File(live.getParentFile,
+                     (if (hidden) "." else "") + live.getName + suffix)
+
+  /** The store's one commit: write the new copy of the directory `live`
+    * at its `.tmp` sibling, then swap it in by renames —
+    *   1. [[recover]] a copy an earlier swap left parked,
+    *   2. drop leftover `.tmp` / `.trash` siblings,
+    *   3. `write` the new copy to `.tmp` (it may read `live`),
+    *   4. rename `live` aside to `.trash`,
+    *   5. rename `.tmp` to `live`,
+    *   6. drop `.trash`.
+    * Fault points `<point>.after-tmp`, `.after-aside` and
+    * `.after-commit` sit between steps 3-6. A crash at any of them
+    * leaves a complete copy on disk: the old one (live, or parked in
+    * `.trash` where [[recover]] finds it) or the new one. A leftover
+    * `.tmp` may be half-written and is never trusted. Renames are
+    * checked: a silently failed swap would drop the new copy.
+    * Takes no lease — writers hold [[withTableLock]] around the whole
+    * read-merge-swap. `hidden` names the siblings `.<name>.tmp` /
+    * `.<name>.trash`, the partition-directory convention.
+    */
+  def swap(live: java.io.File, point: String, hidden: Boolean = false)
+          (write: String => Unit): Unit = {
+    val tmp = sibling(live, hidden, ".tmp")
+    val trash = sibling(live, hidden, ".trash")
+    recover(live, hidden)
+    rmTree(tmp); rmTree(trash)
+    write(tmp.toString)
+    require(tmp.exists(), s"$tmp was not written")
+    Faults.point(s"$point.after-tmp")
+    install(live, tmp, trash, point)
+  }
+
+  /** Steps 4-6 of [[swap]]. An absent `fresh` removes `live`. */
+  private def install(live: java.io.File, fresh: java.io.File,
+                      trash: java.io.File, point: String): Unit = {
+    if (live.exists()) require(live.renameTo(trash), s"aside-rename of $live failed")
+    Faults.point(s"$point.after-aside")
+    if (fresh.exists()) require(fresh.renameTo(live), s"commit rename into $live failed")
+    Faults.point(s"$point.after-commit")
+    rmTree(trash)
+  }
+
+  /** The recovery step beside [[swap]]: a swap that died between its
+    * aside and commit renames left the only complete copy in `.trash`
+    * with `live` gone — rename it back. Takes no lease. Returns true
+    * when `live` exists afterwards.
+    */
+  def recover(live: java.io.File, hidden: Boolean = false): Boolean = {
+    val trash = sibling(live, hidden, ".trash")
+    if (!live.exists() && trash.exists())
+      require(trash.renameTo(live), s"restoring $live from $trash failed")
+    live.exists()
+  }
+
   /** Swap the named partition directories of a `partCol`-partitioned
     * parquet layout for the matching partitions of `replacement` —
-    * the per-partition aside-rename commit every partitioned index
-    * (IVF/IVF-PQ cells, postings term buckets) shares. `replacement`
-    * is written to a `$path.tmp` sibling first (the live layout is
-    * untouched until the renames), then each listed partition is
-    * swapped: old dir parked in a DOT-PREFIXED `.trash` aside (hidden
-    * from partition discovery — a crash can never surface a pseudo-
-    * partition), fresh dir renamed in, aside dropped. A partition
+    * the per-partition commit every partitioned index (IVF/IVF-PQ
+    * cells, postings term buckets) shares. `replacement` is written
+    * once to a `$path.tmp` sibling (the live layout is untouched until
+    * the renames), then each listed partition goes through [[swap]]'s
+    * renames with a hidden `.$partCol=v.trash` aside. A partition
     * with no replacement rows (fully emptied) is deleted outright —
     * a dynamic-partition overwrite would silently leave its old
     * directory serving deleted rows. Crash leaves each partition
-    * complete: old, new, or parked (recovery = rename back).
+    * complete: old, new, or parked ([[recoverPartitionTrash]]).
     * Single-writer, quiesced-probe contract: between a partition's
     * aside-rename and its commit rename the live dir is briefly
     * absent, so a concurrent reader listing partitions in that window
@@ -531,32 +574,23 @@ object Tables {
     replacement.write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
     values.foreach { v =>
       val live = new java.io.File(s"$path/$partCol=$v")
-      val fresh = new java.io.File(s"$tmp/$partCol=$v")
-      val trash = new java.io.File(s"$path/.$partCol=$v.trash")
-      rmTree(trash)
-      if (live.exists) require(live.renameTo(trash), s"aside-rename of $live failed")
-      Faults.point("replacePartitions.after-aside")
-      if (fresh.exists) require(fresh.renameTo(live), s"commit rename into $live failed")
-      Faults.point("replacePartitions.after-commit")
-      rmTree(trash)
+      install(live, new java.io.File(tmp, live.getName),
+              sibling(live, hidden = true, ".trash"), "replacePartitions")
     }
     rmTree(tmp)
   }
 
   /** Converge crashed per-partition swaps before the next maintenance
-    * pass touches the layout: a swap that died between aside-rename
-    * and commit left the only complete copy of a partition parked in
-    * its dot-prefixed `.trash` aside (live dir absent) — rename it
-    * back; a swap that died after its commit left a STALE aside next
-    * to the fresh live dir — drop it. Either way the layout is whole
-    * again and the re-run starts from a consistent tree (the
-    * partition-level twin of writeTable's restore-from-trash
-    * preamble). PUBLIC because every maintenance op must run it
-    * BEFORE reading the layout it will transform: `spark.read` lists
-    * files at analysis time, so a parked partition recovered only
-    * inside [[replacePartitions]] would be invisible to the
-    * replacement frame — its rows absent, the partition then deleted
-    * as "emptied" at the swap.
+    * pass touches the layout: a parked partition (live dir absent) is
+    * [[recover]]ed; a STALE aside next to a fresh live dir (a swap
+    * that died after its commit) is dropped. Either way the layout is
+    * whole again and the re-run starts from a consistent tree. PUBLIC
+    * because every maintenance op must run it BEFORE reading the
+    * layout it will transform: `spark.read` lists files at analysis
+    * time, so a parked partition recovered only inside
+    * [[replacePartitions]] would be invisible to the replacement
+    * frame — its rows absent, the partition then deleted as "emptied"
+    * at the swap.
     */
   def recoverPartitionTrash(path: String, partCol: String): Unit =
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
@@ -565,18 +599,16 @@ object Tables {
       .foreach { trash =>
         val live = new java.io.File(
           path, trash.getName.stripPrefix(".").stripSuffix(".trash"))
-        if (!live.exists())
-          require(trash.renameTo(live), s"recovering $live from $trash failed")
-        else rmTree(trash)
+        if (live.exists()) rmTree(trash) else recover(live, hidden = true)
       }
 
   /** Per-partition small-file compaction for a `partCol`-partitioned
     * layout — the shared engine behind the IVF cell and postings
     * term-bucket compactors: each multi-file partition directory is
     * rewritten (shard count sized from its CURRENT on-disk bytes)
-    * through the same dot-prefixed aside-rename swap as
-    * [[replacePartitions]]; single-file partitions are untouched.
-    * Returns (filesBefore, filesAfter) summed over partitions.
+    * through [[swap]] with hidden siblings; single-file partitions are
+    * untouched. Returns (filesBefore, filesAfter) summed over
+    * partitions.
     */
   def compactPartitions(spark: SparkSession, path: String, partCol: String,
                         targetBytes: Long = 128L << 20): (Int, Int) = {
@@ -591,15 +623,10 @@ object Tables {
       else {
         val nShards = math.max(1,
           math.ceil(files.map(_.length()).sum.toDouble / targetBytes).toInt)
-        val tmp = new java.io.File(d.getParentFile, s".${d.getName}.tmp")
-        val trash = new java.io.File(d.getParentFile, s".${d.getName}.trash")
-        rmTree(tmp); rmTree(trash)
-        spark.read.parquet(d.toString).repartition(nShards)
-          .write.mode("overwrite").parquet(tmp.toString)
-        require(d.renameTo(trash), s"aside-rename of $d failed")
-        Faults.point("compactPartitions.after-aside")
-        require(tmp.renameTo(d), s"commit rename of $d failed")
-        rmTree(trash)
+        swap(d, "compactPartitions", hidden = true) { tmp =>
+          spark.read.parquet(d.toString).repartition(nShards)
+            .write.mode("overwrite").parquet(tmp)
+        }
         val after = Option(d.listFiles()).getOrElse(Array.empty)
           .count(f => f.isFile && f.getName.startsWith("part-"))
         (files.size, after)
@@ -608,21 +635,15 @@ object Tables {
   }
 
   /** READER-SIDE crash preamble, shared by every table/artifact read
-    * that must not silently miss a parked copy: a writer that died
-    * between aside-rename and commit left the ONLY complete copy at
-    * `<path>.trash` (live gone) — restore it under the writer lease
-    * before any exists()/read decision. Returns true when the live
-    * path exists afterwards. Double-checked inside the lease so
-    * concurrent readers race safely.
+    * that must not silently miss a parked copy: [[recover]] under the
+    * writer lease before any exists()/read decision. Returns true when
+    * the live path exists afterwards. Double-checked inside the lease
+    * so concurrent readers race safely.
     */
   def restoreFromTrash(path: String): Boolean = {
     val live = new java.io.File(path)
-    val trash = new java.io.File(s"$path.trash")
-    if (!live.exists() && trash.exists())
-      withTableLock(path) {
-        if (!live.exists() && trash.exists())
-          require(trash.renameTo(live), s"restoring $path from trash failed")
-      }
+    if (!live.exists() && new java.io.File(s"$path.trash").exists())
+      withTableLock(path)(recover(live))
     live.exists()
   }
 
@@ -643,33 +664,34 @@ object Tables {
       }
   }
 
-  /** tmp + aside-rename(.trash) + checked-renames commit of a small
-    * store artifact under its table lease — the tokenizer.parquet
-    * protocol, shared by every trained/derived-artifact writer. NOT
-    * Overwrite-in-place: Overwrite deletes the live dir first, so a
-    * crash mid-write would leave a half-written artifact an exists()
-    * check would silently serve. The restore-from-trash preamble heals
-    * a writer that died between aside-rename and commit; READERS need
-    * the same preamble (see Main.storedArtifact).
+  /** [[swap]] of a small store artifact under its table lease — the
+    * tokenizer.parquet protocol, shared by every trained/derived-
+    * artifact writer. NOT Overwrite-in-place: Overwrite deletes the
+    * live dir first, so a crash mid-write would leave a half-written
+    * artifact an exists() check would silently serve. READERS need
+    * [[restoreFromTrash]] before their exists() check.
     */
   def commitArtifact(path: String)(writeTmp: String => Unit): Unit =
     withTableLock(path) {
-      val live = new java.io.File(path)
-      val tmp = new java.io.File(s"$path.tmp")
-      val trash = new java.io.File(s"$path.trash")
-      if (!live.exists() && trash.exists())
-        require(trash.renameTo(live), s"recovering $path from trash failed")
-      rmTree(tmp); rmTree(trash)
-      writeTmp(tmp.toString)
-      Faults.point("commitArtifact.after-tmp")
-      if (live.exists())
-        require(live.renameTo(trash), s"aside-rename of $path failed")
-      Faults.point("commitArtifact.after-aside")
-      require(tmp.renameTo(live), s"commit rename of $path failed")
-      Faults.point("commitArtifact.after-commit")
-      rmTree(trash)
+      swap(new java.io.File(path), "commitArtifact")(writeTmp)
     }
 
+  /** Compact a parquet/JSONL directory's shards to ~`targetBytes` files
+    * — the operational tool a 100 TB store needs on two fronts: a
+    * too-many-small-files table (each file is a task + a namenode
+    * entry) and too-few-giant-gzip-JSONL shards (gzip is unsplittable,
+    * so shard count caps read parallelism). Reads the table, sizes the
+    * shard count from the CURRENT on-disk bytes (compressed — what the
+    * next reader actually pays for), rewrites via `repartition`, and
+    * lands it through [[swap]] under the table lease (a crash leaves a
+    * complete old or new snapshot, never a mix). Returns
+    * (filesBefore, filesAfter).
+    *
+    * NOTE: a repartition round-trip drops bucketing metadata — the
+    * co-bucketed store tables compact through their own bucketed
+    * writer instead ([[writeBucketed]] already writes one file per
+    * bucket); this tool is for the export/ingest shard dirs.
+    */
   def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20,
               format: String = "parquet", codec: String = "gzip"): (Int, Int) =
     withTableLock(path) {
@@ -677,14 +699,9 @@ object Tables {
       Option(dir.listFiles()).getOrElse(Array.empty).toSeq
         .filter(f => f.isFile && f.getName.startsWith("part-"))
     val dir = new java.io.File(path)
-    val trash = new java.io.File(s"$path.trash")
-    // crash recovery, mirroring Main.writeTable's preamble: a crash
-    // between the aside-rename and the commit rename leaves no live dir
-    // and the only complete snapshot parked in .trash — restore it
-    // instead of failing 'nothing to compact' (a leftover .tmp may be
-    // half-written and is never trusted)
-    if (!dir.exists() && trash.exists())
-      require(trash.renameTo(dir), s"recovering $path from trash failed")
+    // a crash between the aside and commit renames parked the only
+    // complete copy: restore it instead of failing 'nothing to compact'
+    recover(dir)
     val before = dataFiles(dir)
     require(before.nonEmpty, s"nothing to compact at $path")
     val totalBytes = before.map(_.length()).sum
@@ -697,15 +714,11 @@ object Tables {
       case "json" => spark.read.json(path)
       case other => throw new IllegalArgumentException(s"unsupported format: $other")
     }
-    val tmp = new java.io.File(s"$path.tmp")
-    rmTree(tmp); rmTree(trash)
-    val w = df.repartition(nShards).write.mode("overwrite")
-    if (format == "parquet") w.parquet(tmp.toString)
-    else w.option("compression", codec).json(tmp.toString)
-    require(dir.renameTo(trash), s"aside-rename of $path failed")
-    Faults.point("compact.after-aside")
-    require(tmp.renameTo(dir), s"commit rename of $path failed")
-    rmTree(trash)
+    swap(dir, "compact") { tmp =>
+      val w = df.repartition(nShards).write.mode("overwrite")
+      if (format == "parquet") w.parquet(tmp)
+      else w.option("compression", codec).json(tmp)
+    }
     (before.size, dataFiles(dir).size)
   }
 

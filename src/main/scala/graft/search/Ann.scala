@@ -812,7 +812,11 @@ object Ann {
     * assumes quiesced probes: between a cell's aside-rename and its
     * commit rename the live `cell=N` directory is briefly absent, so a
     * probe listing partitions inside that window would silently miss
-    * that cell's rows (same contract as [[ivfCompactIndex]]).
+    * that cell's rows (same contract as cell compaction,
+    * [[graft.io.Tables.compactPartitions]] on `cell`). Only
+    * `(idCol, cell)` is interpreted, so the same call maintains the
+    * IVF-PQ layout, whose codes and re-rank vectors ride as passenger
+    * columns.
     */
   def ivfRemoveFromIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, removals: DataFrame,
@@ -1032,28 +1036,6 @@ object Ann {
   private[search] def indexHasCells(path: String): Boolean =
     Option(new java.io.File(path).listFiles()).exists(_.exists(f =>
       f.isDirectory && f.getName.startsWith("cell=")))
-
-  /** INCREMENTAL index maintenance, compaction side: many
-    * [[ivfAppendIndex]] batches leave each cell directory with one
-    * small file per append — the classic small-files tax on every
-    * probe. Each multi-file cell is rewritten through a per-cell
-    * aside-rename swap whose tmp/trash dirs are DOT-PREFIXED siblings:
-    * Spark's partition discovery ignores hidden dirs, so a crash can
-    * never surface a `cell=N.trash` pseudo-partition — the aside dir
-    * is invisible until renamed back into place (recovery = rename).
-    * Maintenance is single-writer and assumes quiesced probes: the
-    * hidden-dir trick only prevents pseudo-partitions, it does NOT
-    * close the swap window — between the aside-rename and the commit
-    * rename the live `cell=N` directory is briefly absent, and a
-    * concurrent probe listing partitions in that gap silently loses
-    * the whole cell. Single-file cells are untouched. Probes and
-    * partition pruning are unchanged after maintenance completes.
-    * Returns (filesBefore, filesAfter) summed over cells.
-    */
-  def ivfCompactIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String,
-                      targetBytes: Long = 128L << 20): (Int, Int) =
-    graft.io.Tables.compactPartitions(spark, path, "cell", targetBytes)
 
   // ---------------------------------------------------- product quantization
 
@@ -1329,35 +1311,6 @@ object Ann {
                 idCol, vecCol, codebooks, m, dims)
       .write.mode("append").partitionBy("cell").parquet(path)
   }
-
-  /** INCREMENTAL IVF-PQ maintenance, remove side (dedup demotion, PII
-    * takedown): the stored IVF-PQ layout is the plain IVF layout plus
-    * passenger columns (PQ codes `c0..c{m-1}`, the full vector for the
-    * re-rank tier) — and [[ivfRemoveFromIndex]] never interprets row
-    * contents beyond `(idCol, cell)`, so the SAME per-cell aside-rename
-    * machinery maintains both layouts: only the affected cell
-    * directories are read and swapped, untouched cells keep their
-    * exact files, a fully-emptied cell's directory disappears. A named
-    * entry point (rather than asking callers to know the layouts
-    * coincide) so the PQ tier's maintenance surface is explicit and
-    * spec-gated against ITS OWN probe path.
-    */
-  def ivfPqRemoveFromIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, removals: DataFrame,
-                           idCol: String): Unit =
-    ivfRemoveFromIndex(spark, path, removals, idCol)
-
-  /** INCREMENTAL IVF-PQ maintenance, compaction side: merge the small
-    * files [[ivfPqAppendIndex]] batches leave in each cell directory.
-    * Same layout-generic per-cell swap as [[ivfCompactIndex]] (see
-    * [[ivfPqRemoveFromIndex]] for why that is sound); the codes-only
-    * ReadSchema and partition pruning of the stored probe are
-    * re-asserted after compaction in `IvfPqMaintenanceSpec`.
-    */
-  def ivfPqCompactIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        targetBytes: Long = 128L << 20): (Int, Int) =
-    ivfCompactIndex(spark, path, targetBytes)
 
   /** ANN RECALL EVALUATION — recall@k of the IVF probe against the
     * exact ranking, per query, as a verifiable operator: the

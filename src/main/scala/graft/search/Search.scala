@@ -695,8 +695,9 @@ object Search {
       .write.mode("append").partitionBy("tb").parquet(path)
     // norms ride every append (indexes written before the sidecar
     // existed gain it on their next full rebuild, not piecemeal —
-    // a partial norms table would silently mis-count N/T)
-    if (new java.io.File(normsPath(path)).exists())
+    // a partial norms table would silently mis-count N/T); a norms
+    // swap that crashed parked them, so recover before the check
+    if (Tables.recover(new java.io.File(normsPath(path))))
       docNorms(df, idCol, textCol)
         .write.mode("append").parquet(normsPath(path))
   }
@@ -752,17 +753,11 @@ object Search {
     // has no postings to prune (a zero-token doc still has a norms
     // row, and N/T must stop counting a taken-down doc)
     val norms = new java.io.File(normsPath(path))
-    if (norms.exists()) {
+    if (Tables.recover(norms)) {
       val kept = spark.read.parquet(norms.toString)
         .join(removals.select(col(idCol)), Seq(idCol), "left_anti")
         .localCheckpoint(true) // pinned BEFORE the dir it read is swapped
-      val tmp = new java.io.File(s"${norms.getPath}.tmp")
-      val trash = new java.io.File(s"${norms.getPath}.trash")
-      graft.io.Tables.rmTree(tmp); graft.io.Tables.rmTree(trash)
-      kept.write.mode("overwrite").parquet(tmp.toString)
-      require(norms.renameTo(trash), s"aside-rename of $norms failed")
-      require(tmp.renameTo(norms), s"commit rename of $norms failed")
-      graft.io.Tables.rmTree(trash)
+      Tables.swap(norms, "postingsNorms")(kept.write.mode("overwrite").parquet(_))
     }
     if (postingsIsEmpty(path)) return // already-empty index: no-op
     val buckets = buildPostings(removals, idCol, textCol, nBuckets)

@@ -283,7 +283,7 @@ object VectorIndex {
       val nRemoved = removals.map(_.count()).getOrElse(0L)
       val nAppended = appends.count()
       if (nRemoved > 0)
-        removals.foreach(Ann.ivfPqRemoveFromIndex(spark, path, _, idCol))
+        removals.foreach(Ann.ivfRemoveFromIndex(spark, path, _, idCol))
       if (nAppended > 0)
         Ann.ivfPqAppendIndex(appends, idCol, vecCol, meta.centroids,
                              meta.codebooks, path, meta.m, meta.dims)

@@ -78,6 +78,20 @@ class CrashSweepSpec extends SparkSpec {
     }
   }
 
+  test("ingest: a batch that crashes mid-commit frees every scratch pin it made") {
+    val store = Files.createTempDirectory("graft_sweep_pins").toString
+    Main.runIngest(spark, mkInputs(batch1: _*), store, "nomic", now)
+    val in2 = mkInputs(batch2: _*)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Faults.arm("writeTable.after-tmp")
+    intercept[Faults.InjectedCrash] {
+      Main.runIngest(spark, in2, store, "nomic", later)
+    }
+    Faults.reset()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "a failed batch must not leak its scratch pins")
+  }
+
   test("commitArtifact: a crash at every step converges via re-train; readers restore from trash") {
     val in1 = mkInputs(batch1: _*)
     val control = Files.createTempDirectory("graft_sweep_actl").toString
@@ -674,6 +688,35 @@ class CrashSweepSpec extends SparkSpec {
     Faults.reset()
     Search.compactPostings(spark, idx)
     assert(probe() == beforeCompact, "compaction crash must not lose a bucket")
+
+    // norms-swap crash: the aside holds the only norms copy. The next
+    // append must recover it (not skip norms as "missing"), and the
+    // re-run removal must converge to the never-crashed twin
+    val rm3 = Seq((3L, "alpha table scan beta w3 extra words here")).toDF("doc_id", "text")
+    val add99 = Seq((99L, "alpha table scan beta w99 extra words here")).toDF("doc_id", "text")
+    def normsRanking(p: String) = (
+      spark.read.parquet(s"$p.norms").as[(Long, Long)].collect().toSeq.sorted,
+      Search.bm25LogTopKStored(spark, p, "doc_id", "table w7 w99", k = 50)
+        .as[(Long, Long, Long)].collect().toSeq.sortBy(r => (-r._3, r._1)))
+    for (p <- Seq(control, idx)) {
+      graft.io.Tables.rmTree(new java.io.File(p))
+      graft.io.Tables.rmTree(new java.io.File(s"$p.norms"))
+      Search.writePostings(df, "doc_id", "text", p, nBuckets = 8)
+    }
+    Search.removeFromPostings(spark, rm3, "doc_id", "text", control)
+    Search.appendPostings(spark, add99, "doc_id", "text", control)
+    Search.removeFromPostings(spark, rm3, "doc_id", "text", control)
+    Faults.arm("postingsNorms.after-aside")
+    intercept[Faults.InjectedCrash] {
+      Search.removeFromPostings(spark, rm3, "doc_id", "text", idx)
+    }
+    Faults.reset()
+    Search.appendPostings(spark, add99, "doc_id", "text", idx)
+    Search.removeFromPostings(spark, rm3, "doc_id", "text", idx)
+    val (wantNorms, wantRank) = normsRanking(control)
+    assert(wantNorms.map(_._1).toSet == (1L to 40L).toSet - 3L + 99L)
+    assert(normsRanking(idx) == (wantNorms, wantRank),
+      "a norms-swap crash must converge to the never-crashed twin")
   }
 
   test("vector-index maintenance: a cell-swap crash converges on the re-run without losing rows") {

@@ -112,7 +112,7 @@ class IvfMaintenanceSpec extends SparkSpec {
     val beforeProbe = probeAll(path, ids)
     val beforeFiles = snapshot(path).size
 
-    val (nBefore, nAfter) = Ann.ivfCompactIndex(spark, path)
+    val (nBefore, nAfter) = graft.io.Tables.compactPartitions(spark, path, "cell")
     assert(nBefore == beforeFiles, s"compaction saw $nBefore of $beforeFiles files")
     assert(nAfter < nBefore, s"compaction must shrink file count, $nBefore -> $nAfter")
     assert(snapshot(path).size == nAfter)

@@ -11,10 +11,10 @@ import graft.search.Ann
   *     under the FROZEN centroids/codebooks and lands as per-cell
   *     appends; existing files are never rewritten, and stored probes
   *     answer exactly as a full rebuild over the union;
-  *   - [[Ann.ivfPqRemoveFromIndex]]: takedown rewrites ONLY the
+  *   - [[Ann.ivfRemoveFromIndex]] on the PQ layout: takedown rewrites ONLY the
   *     affected cells; untouched cells keep byte-identical files and a
   *     fully-emptied cell's directory disappears;
-  *   - [[Ann.ivfPqCompactIndex]]: merges append-era small files per
+  *   - [[graft.io.Tables.compactPartitions]] on `cell`: merges append-era small files per
   *     cell; probes, partition pruning, and the codes-only ADC
   *     ReadSchema all survive.
   * Mirrors `IvfMaintenanceSpec`, but every equivalence check runs
@@ -120,7 +120,7 @@ class IvfPqMaintenanceSpec extends SparkSpec {
     }.toDF("vec_id", "cell")
     val before = snapshot(path)
 
-    Ann.ivfPqRemoveFromIndex(spark, path, removals, "vec_id")
+    Ann.ivfRemoveFromIndex(spark, path, removals, "vec_id")
 
     assert(!new java.io.File(s"$path/cell=$emptiedCell").exists,
            "fully-emptied cell directory must be deleted")
@@ -148,7 +148,7 @@ class IvfPqMaintenanceSpec extends SparkSpec {
     val beforeProbe = Seq(0L, 7L, 13L).map(qi => stored(path, qv(qi)))
     val beforeFiles = snapshot(path).size
 
-    val (nBefore, nAfter) = Ann.ivfPqCompactIndex(spark, path)
+    val (nBefore, nAfter) = graft.io.Tables.compactPartitions(spark, path, "cell")
     assert(nBefore == beforeFiles, s"compaction saw $nBefore of $beforeFiles files")
     assert(nAfter < nBefore, s"compaction must shrink file count, $nBefore -> $nAfter")
     assert(snapshot(path).size == nAfter)
@@ -263,7 +263,7 @@ class IvfPqMaintenanceSpec extends SparkSpec {
     assert(!new java.io.File(s"$path/cell=4").exists,
            "a retired cell id must not resurrect on append")
 
-    val (nb, na) = Ann.ivfPqCompactIndex(spark, path)
+    val (nb, na) = graft.io.Tables.compactPartitions(spark, path, "cell")
     assert(na < nb, s"compaction must shrink files, $nb -> $na")
     checkExact("compact")
 
@@ -272,7 +272,7 @@ class IvfPqMaintenanceSpec extends SparkSpec {
       .select($"vec_id", $"cell".cast("long").as("cell"))
       .filter($"vec_id".isin(removedIds: _*))
       .localCheckpoint(true)
-    Ann.ivfPqRemoveFromIndex(spark, path, removals, "vec_id")
+    Ann.ivfRemoveFromIndex(spark, path, removals, "vec_id")
     live = live.filterNot(removedIds.contains)
     checkExact("remove")
   }

@@ -91,7 +91,7 @@ class VectorIndexSpec extends SparkSpec {
       .select($"chunk_id", $"cell".cast("long").as("cell"))
       .filter($"chunk_id".isin("c3", "c7"))
       .localCheckpoint(true)
-    Ann.ivfPqRemoveFromIndex(spark, path, victims, "chunk_id")
+    Ann.ivfRemoveFromIndex(spark, path, victims, "chunk_id")
     assert(indexIds(path) != ids.map(i => s"c$i").toSet, "fixture must diverge")
 
     val (nAdd, nRm) = VectorIndex.reconcile(spark, path, slice(ids),
