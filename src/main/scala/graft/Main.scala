@@ -2,8 +2,9 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.Schemas.{JobRow, JobStatus, JobType}
 import graft.chunk.Chunkers
@@ -2153,50 +2154,49 @@ object Main {
     require(tmp.renameTo(f), "search-cache invalidation swap failed")
   }
 
-  /** [[runSearch]] behind the Q4 cache tier: probe the persisted cache
-    * table by the deterministic key; on miss compute and append.
-    * Returns (result lines, hit?). A store update for the provider
-    * invalidates its keys ([[invalidateSearchCache]], called from
-    * [[ingestBatch]]), so a repeat search after ingest recomputes.
+  /** The search cache's fixed schema: a re-open reads it as given and
+    * infers nothing. Built rather than parsed from DDL: that parse ran
+    * when `Main` initialized, inside the first command's time.
+    */
+  private val SearchCacheSchema = StructType(
+    Seq("cache_key", "embedding_provider", "chunk_id").map(StructField(_, StringType)) :+
+      StructField("score", DoubleType))
+
+  /** [[runSearch]] behind the Q4 cache tier: the deterministic key is
+    * computed on the driver ([[Search.cacheKeyOf]]), the persisted
+    * cache is probed by one collect of the key's rows, and a miss
+    * appends the k rows its search collected. Returns (result lines,
+    * hit?). A store update for the provider invalidates its keys
+    * ([[invalidateSearchCache]], called from [[ingestBatch]]), so a
+    * repeat search after ingest recomputes.
     */
   def runSearchCached(spark: SparkSession, storeDir: String, query: String,
                       providerName: String, k: Int): (Seq[String], Boolean) = {
-    import spark.implicits._
     val qv = Embedding.embedQuery(query, providerName).toSeq
-    val key = spark.range(1)
-      .select(Search.cacheKey(typedLit(qv), lit(providerName),
-                              lit(null).cast("string"), lit(k)).as("k"))
-      .as[String].head()
+    val key = Search.cacheKeyOf(spark, qv, providerName, k)
     val f = new java.io.File(s"$storeDir/search_cache.parquet")
     val cache =
-      if (f.exists()) Tables.read(spark, f.toString)
-      else Seq.empty[(String, String, String, Double)]
-        .toDF("cache_key", "embedding_provider", "chunk_id", "score")
-    val (res0, hit) = Search.cachedSearch(cache, key, () =>
+      if (f.exists())
+        Tables.handle(spark, f.toString)(spark.read.schema(SearchCacheSchema).parquet(f.toString))
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), SearchCacheSchema)
+    val (res, hit) = Search.cachedSearch(cache, key, () =>
       Search.knn(openTable(spark, storeDir, "embeddings"), qv, k = k,
                  provider = Some(providerName), tieBreak = Seq(col("chunk_id")))
         .select(lit(providerName).as("embedding_provider"),
                 col("chunk_id"), col("score")))
-    // a miss is a full corpus scan: pin its k rows so the collect for
-    // the caller and the cache append below run the scan ONCE
-    val res = if (hit) res0 else res0.localCheckpoint(true)
-    val rows = res.select(col("chunk_id"), col("score"))
-      .orderBy(col("score").desc, col("chunk_id"))
-      .collect().map(r =>
-        s"""{"chunk_id":"${r.getString(0)}","score":${r.getDouble(1)}}""").toSeq
-    if (!hit) {
-      res.select(col("cache_key"), col("embedding_provider"),
-                 col("chunk_id"), col("score"))
+    if (!hit)
+      res.select(SearchCacheSchema.fieldNames.map(col).toSeq: _*)
         .write.mode(SaveMode.Append).parquet(f.toString)
-      graft.io.Pins.release(res)
-    }
-    (rows, hit)
+    val rows = res.select(col("chunk_id"), col("score")).collect().toSeq
+      .sortBy(r => (-r.getDouble(1), r.getString(0)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+    (rows.map(r => s"""{"chunk_id":"${r.getString(0)}","score":${r.getDouble(1)}}"""), hit)
   }
 
   // ------------------------------------------------------------------ search
 
   /** `search <query>`: embed the query text, exact cosine top-k over
-    * the stored embeddings, join chunk content back
+    * the stored embeddings, then chunk content by id
     * (`cli/main.py:36-51` → `api/routes/documents.py:95-130`).
     */
   def runSearch(spark: SparkSession, storeDir: String, query: String,
@@ -2205,14 +2205,30 @@ object Main {
     val emb = openTable(spark, storeDir, "embeddings")
     val top = Search.knn(emb, qv.toSeq, k = k, provider = Some(providerName),
                          tieBreak = Seq(col("chunk_id")))
-    top.join(openTable(spark, storeDir, "chunks")
-               .select(col("chunk_id"), col("content")), Seq("chunk_id"))
-      .orderBy(col("score").desc, col("chunk_id"))
-      .collect().map { r =>
-        val content = jsonEscape(r.getAs[String]("content"))
-        s"""{"chunk_id":"${r.getAs[String]("chunk_id")}",""" +
-        s""""score":${r.getAs[Double]("score")},"content":"$content"}"""
-      }.toSeq
+      .select(col("chunk_id"), col("score")).collect().toSeq
+    withContent(spark, storeDir, top) { (r, content) =>
+      s"""{"chunk_id":"${r.getString(0)}",""" +
+      s""""score":${r.getDouble(1)},"content":"$content"}"""
+    }
+  }
+
+  /** The serving rule every search kind follows: a ranking is
+    * collected to the driver first, then the content of its ids is
+    * fetched by one read of `chunks` filtered on those ids as literals
+    * (bucket-pruned; no join, so no adaptive stage), and each ranked
+    * row (id first) becomes a line in ranked order, with its content
+    * JSON-escaped. Ids the store no longer holds drop out.
+    */
+  private def withContent(spark: SparkSession, storeDir: String, ranked: Seq[Row])
+                         (line: (Row, String) => String): Seq[String] = {
+    val ids = ranked.map(_.getString(0))
+    val content =
+      if (ids.isEmpty) Map.empty[String, String]
+      else openTable(spark, storeDir, "chunks")
+        .filter(col("chunk_id").isInCollection(ids))
+        .select(col("chunk_id"), col("content"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    ranked.flatMap(r => content.get(r.getString(0)).map(c => line(r, jsonEscape(c))))
   }
 
   /** `search <store> <query> --mmr [provider] [k]`: diversified
@@ -2269,7 +2285,20 @@ object Main {
     * in `Bm25LogSpec`), so index presence changes cost, never answers.
     */
   def runSearchBm25(spark: SparkSession, storeDir: String, query: String,
-                    k: Int): Seq[String] = {
+                    k: Int): Seq[String] =
+    withContent(spark, storeDir, bm25Ranking(spark, storeDir, query, k)) { (r, content) =>
+      s"""{"chunk_id":"${r.getString(0)}",""" +
+      s""""score":${r.getLong(2)},"dl":${r.getLong(1)},""" +
+      s""""content":"$content"}"""
+    }
+
+  /** [[runSearchBm25]]'s ranking, collected: (chunk_id, dl, score) rows,
+    * score descending then chunk_id — the stored postings when they
+    * carry norms, the inline scan otherwise. The lexical tier of
+    * [[runSearchHybrid]] too.
+    */
+  private def bm25Ranking(spark: SparkSession, storeDir: String, query: String,
+                          k: Int): Seq[Row] = {
     val idx = s"$storeDir/postings.idx"
     val ranked =
       if (Search.postingsServesBm25(idx))
@@ -2277,15 +2306,7 @@ object Main {
       else
         Search.bm25LogTopK(openTable(spark, storeDir, "chunks"),
                            "chunk_id", "content", query, k = k)
-    ranked.join(openTable(spark, storeDir, "chunks")
-                  .select(col("chunk_id"), col("content")), Seq("chunk_id"))
-      .orderBy(col("score").desc, col("chunk_id"))
-      .collect().map { r =>
-        val content = jsonEscape(r.getAs[String]("content"))
-        s"""{"chunk_id":"${r.getAs[String]("chunk_id")}",""" +
-        s""""score":${r.getAs[Long]("score")},"dl":${r.getAs[Long]("dl")},""" +
-        s""""content":"$content"}"""
-      }.toSeq
+    ranked.select(col("chunk_id"), col("dl"), col("score")).collect().toSeq
   }
 
   /** `search <store> <query> --suggest`: "did you mean" — exact
@@ -2381,15 +2402,12 @@ object Main {
     val meta = VectorIndex.readMeta(path)
     val qv = Embedding.embedQuery(query, meta.provider).toSeq
       .map(graft.search.Ann.quantizeL)
-    VectorIndex.topK(spark, path, meta, "chunk_id", "embedding", qv, k, nprobe)
-      .join(openTable(spark, storeDir, "chunks")
-              .select(col("chunk_id"), col("content")), Seq("chunk_id"))
-      .orderBy(col("d2").asc, col("chunk_id"))
-      .collect().map { r =>
-        val content = jsonEscape(r.getAs[String]("content"))
-        s"""{"chunk_id":"${r.getAs[String]("chunk_id")}",""" +
-        s""""d2":${r.getAs[Long]("d2")},"content":"$content"}"""
-      }.toSeq
+    val top = VectorIndex.topK(spark, path, meta, "chunk_id", "embedding", qv, k, nprobe)
+      .select(col("chunk_id"), col("d2")).collect().toSeq
+    withContent(spark, storeDir, top) { (r, content) =>
+      s"""{"chunk_id":"${r.getString(0)}",""" +
+      s""""d2":${r.getLong(1)},"content":"$content"}"""
+    }
   }
 
   /** `recall <store> [k] [nprobe] [nQueries]`: the served index's
@@ -2531,36 +2549,33 @@ object Main {
   }
 
   /** `search <store> <query> --hybrid [--nprobe=N]`: fuse the two
-    * retrieval tiers the store serves — the BM25 lexical ranking over
-    * the chunk text (q81's operator) and the stored vector index's ANN
-    * probe — by reciprocal-rank fusion (q126's operator, served). The
-    * tiers disagree exactly when one modality is blind (paraphrases
-    * beat BM25; exact identifiers beat embeddings), and RRF is the
-    * rank-level fusion that needs no score calibration between them.
-    * Emits (chunk_id, rrf_score, n_lists): n_lists = 2 marks hits both
-    * tiers agree on.
+    * retrieval tiers the store serves — [[runSearchBm25]]'s lexical
+    * ranking (log IDF; the stored postings when built) and the stored
+    * vector index's ANN probe — by reciprocal-rank fusion (q126's
+    * operator, served). The tiers disagree exactly when one modality
+    * is blind (paraphrases beat BM25; exact identifiers beat
+    * embeddings), and RRF is the rank-level fusion that needs no score
+    * calibration between them. Both rankings are collected first and
+    * fused as local rows. Emits (chunk_id, rrf_score, n_lists):
+    * n_lists = 2 marks hits both tiers agree on.
     */
   def runSearchHybrid(spark: SparkSession, storeDir: String, query: String,
                       k: Int, nprobe: Int = 2): Seq[String] = {
-    import graft.search.{Ann, Search, VectorIndex}
-    import org.apache.spark.sql.expressions.Window
-    val chunks = openTable(spark, storeDir, "chunks")
-      .select(col("chunk_id"), col("content"))
-    val sparse = Search.bm25TopK(chunks, "chunk_id", "content", query, k = k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("score").desc, col("chunk_id"))).cast("long"))
-    val path = VectorIndex.indexPath(storeDir)
+    import graft.search.{Ann, VectorIndex}
+    import spark.implicits._
+    def ranks(ids: Seq[String]): DataFrame =
+      ids.zipWithIndex.map { case (id, i) => (id, i + 1L) }.toDF("chunk_id", "rank")
+    val sparse = ranks(bm25Ranking(spark, storeDir, query, k).map(_.getString(0)))
     val rankings =
       if (!VectorIndex.servable(storeDir)) Seq(sparse)
       else {
+        val path = VectorIndex.indexPath(storeDir)
         val meta = VectorIndex.readMeta(path)
         val qv = Embedding.embedQuery(query, meta.provider).toSeq
           .map(Ann.quantizeL)
-        val dense = VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
-                                     qv, k, nprobe)
-          .withColumn("rank", row_number().over(
-            Window.orderBy(col("d2").asc, col("chunk_id"))).cast("long"))
-        Seq(sparse, dense)
+        Seq(sparse, ranks(VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
+                                           qv, k, nprobe)
+                            .select(col("chunk_id")).as[String].collect().toSeq))
       }
     Search.rrfFuse(rankings, "chunk_id", "rank", k = k)
       .orderBy(col("rrf_score").desc, col("chunk_id"))

@@ -240,9 +240,9 @@ object Tables {
   // ------------------------------------------------------- read handles
 
   private type Stamp = Seq[(String, AnyRef, Long, Long)]
-  private final case class Handle(stamp: Stamp, df: DataFrame)
+  private final case class Handle(stamp: Stamp, value: Any)
 
-  /** Open handles per session. Keyed by session identity, so a frame
+  /** Open handles per session. Keyed by session identity, so a value
     * never crosses sessions, and a session's map is dropped when its
     * context ends: the frames reference their session, so a weak-keyed
     * map would never free a stopped session's entry.
@@ -280,29 +280,33 @@ object Tables {
     } catch { case _: java.io.IOException => None }
   }
 
-  /** The session's read handle on `path`: the frame `open` resolved, as
-    * long as the fingerprint of the tree at `path` is unchanged. Any
-    * change to an entry re-opens, so a handle sees exactly the rows a
-    * fresh read sees. A reuse skips `open`'s schema inference, file
-    * listing and catalog DDL, and starts no Spark job. The fingerprint
+  /** The session's read handle on `path`: the value `open` computed
+    * (a resolved frame, or a small driver-side value derived from the
+    * tree such as corpus statistics or per-cell row counts), as long as
+    * the fingerprint of the tree at `path` is unchanged. `part` names
+    * one of several values held for the same path. Any change to an
+    * entry re-opens, so a handle sees exactly the rows a fresh read
+    * sees. A reuse skips `open`'s schema inference, file listing,
+    * catalog DDL or collect, and starts no Spark job. The fingerprint
     * is taken before `open`: a write racing the open costs a re-open
-    * on the next call, never a stale frame. Every caller of one path
-    * passes an equivalent `open`.
+    * on the next call, never a stale value. Every caller of one
+    * (path, part) passes an equivalent `open`.
     */
-  def handle(spark: SparkSession, path: String)(open: => DataFrame): DataFrame = {
+  def handle[T](spark: SparkSession, path: String, part: String = "")(open: => T): T = {
     if (spark.sparkContext.isStopped) return open
-    val key = new java.io.File(path).getAbsolutePath
-    val now = stamp(key)
+    val root = new java.io.File(path).getAbsolutePath
+    val key = if (part.isEmpty) root else s"$root#$part"
+    val now = stamp(root)
     val mine = handlesOf(spark)
     Option(mine.get(key)) match {
-      case Some(h) if now.contains(h.stamp) => h.df
+      case Some(h) if now.contains(h.stamp) => h.value.asInstanceOf[T]
       case _ =>
-        val df = open
+        val v = open
         now match {
-          case Some(s) => mine.put(key, Handle(s, df))
+          case Some(s) => mine.put(key, Handle(s, v))
           case None => mine.remove(key)
         }
-        df
+        v
     }
   }
 

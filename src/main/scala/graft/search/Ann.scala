@@ -1176,21 +1176,49 @@ object Ann {
       spark.read.parquet(path)
     }
 
+  /** Rows per cell of a stored index, held in the session's read
+    * handle per on-disk state of the index: one counting job per state,
+    * none on a warm probe.
+    */
+  private def cellRows(spark: org.apache.spark.sql.SparkSession,
+                       path: String): Map[Long, Long] =
+    graft.io.Tables.handle(spark, path, "cellRows") {
+      storedIndex(spark, path).groupBy(col("cell").cast("long")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+
+  /** The cells a stored probe reads: the `nprobe` best in [[rankCells]]
+    * order, widened in that order until they hold at least `k` rows or
+    * every cell is read — a probe whose best cells are sparse still
+    * answers min(k, rows) rows. When the first `nprobe` cells already
+    * hold `k` rows the set is exactly theirs.
+    */
+  private[graft] def probeCells(centroids: Seq[(Long, Seq[Long])],
+                                queryVec: Seq[Long], nprobe: Int, k: Int,
+                                rows: Map[Long, Long]): Seq[Long] = {
+    val ranked = rankCells(centroids, queryVec, centroids.size)
+    val held = ranked.scanLeft(0L)(_ + rows.getOrElse(_, 0L)).tail
+    val enough = held.indexWhere(_ >= k) + 1
+    ranked.take(math.max(nprobe, if (enough == 0) ranked.size else enough))
+  }
+
   /** Probe a STORED IVF-PQ index with the scan/fetch split that makes
     * the plan right at 100 TB — unlike the in-memory [[ivfPqTopK]]
     * (where the vector column is already resident), the stored probe
     * must not DECODE vectors it will never re-rank:
-    *  1. cell pruning — PartitionFilters keep all but `nprobe`
-    *     directories unread;
+    *  1. cell pruning — PartitionFilters keep all but the probed
+    *     directories unread ([[probeCells]]: `nprobe`, widened to hold
+    *     k rows);
     *  2. ADC scan — an explicit projection of (id, codes) only, so the
     *     parquet reader never materializes the vector column
-    *     (ReadSchema-asserted in the spec); top `k·rerankFactor` by
-    *     the broadcast distance tables;
-    *  3. re-rank fetch — the candidate id set (constant-sized)
-    *     broadcast back against the same pruned partitions, reading
-    *     the vector column for only those rows; exact integer L2.
+    *     (ReadSchema-asserted in the spec); its top `k·rerankFactor` by
+    *     the broadcast distance tables is COLLECTED here, one job;
+    *  3. re-rank fetch — the returned frame re-reads the same pruned
+    *     partitions filtered to that constant-sized id set (literals,
+    *     no join, so no broadcast stage), reading the vector column
+    *     for only those rows; exact integer L2.
     * Same conventions as [[ivfPqTopK]] end-to-end, so results are
-    * identical.
+    * identical whenever the first `nprobe` cells hold k rows.
     */
   def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                       idCol: String, vecCol: String,
@@ -1198,22 +1226,31 @@ object Ann {
                       codebooks: Seq[(Long, Seq[Long])], queryVec: Seq[Long],
                       k: Int = 10, nprobe: Int = 2, rerankFactor: Int = 3,
                       m: Int = 8, dims: Int = 64): DataFrame = {
-    val probeCells = rankCells(centroids, queryVec, nprobe)
+    val cells = probeCells(centroids, queryVec, nprobe, k, cellRows(spark, path))
     val pruned = storedIndex(spark, path)
       .withColumn("cell", col("cell").cast("long"))
-      .filter(col("cell").isInCollection(probeCells))
-    val adcTop = pruned
-      .select(col(idCol) +: col("cell") +: (0 until m).map(i => col(s"c$i")): _*)
+      .filter(col("cell").isInCollection(cells))
+    val cut = pruned
+      .select(col(idCol) +: (0 until m).map(i => col(s"c$i")): _*)
       .withColumn("adc", adcColumn(codebooks, queryVec, m, dims / m))
       .orderBy(col("adc").asc, col(idCol))
       .limit(k * rerankFactor)
-      .select(col(idCol), col("cell"), col("adc"))
+      .select(col(idCol), col("adc"))
+      .collect()
+    // per-query values enter as referenced literals (a map, a decimal),
+    // never inlined longs, so every probe reuses one compiled stage
+    val adc =
+      if (cut.isEmpty) lit(null).cast("long")
+      else element_at(map(cut.toSeq.flatMap(r => Seq(lit(r.get(0)), lit(r.getLong(1)))): _*),
+                      col(idCol))
     val iv = intVec(col(vecCol))
-    val q = typedLit(queryVec)
-    val qNorm = queryVec.map(x => x * x).sum
-    pruned.select(col(idCol), col(vecCol))
-      .join(broadcast(adcTop), Seq(idCol))
-      .withColumn("d2", intDot(iv, iv) - lit(2L) * intDot(iv, q) + lit(qNorm))
+    val qNorm = lit(java.math.BigDecimal.valueOf(queryVec.map(x => x * x).sum))
+      .cast("decimal(38,0)")
+    pruned.select(col(idCol), col("cell"), col(vecCol))
+      .filter(col(idCol).isInCollection(cut.map(_.get(0))))
+      .withColumn("adc", adc)
+      .withColumn("d2", ((intDot(iv, iv) - lit(2L) * intDot(iv, typedLit(queryVec)))
+                           .cast("decimal(38,0)") + qNorm).cast("long"))
       .orderBy(col("d2").asc, col(idCol))
       .limit(k)
       .select(col(idCol), col("cell"), col("adc"), col("d2"))

@@ -208,7 +208,6 @@ object Search {
                   query: String, k: Int = 10): DataFrame = {
     val qts = queryTokens(query).distinct
     require(qts.nonEmpty, "query must contain at least one word token")
-    val dec = "decimal(38,0)"
     val toks = df.select(
       col(idCol),
       filter(split(lower(coalesce(col(contentCol), lit(""))), "\\W+"),
@@ -221,46 +220,39 @@ object Search {
       }.drop("__toks")
     val aggs = sum(col("__dl")).as("__T") +: count(lit(1)).as("__N") +:
       qts.indices.map(i => sum((col(s"__tf$i") > 0).cast("long")).as(s"__df$i"))
-    val stats0 = withTf.agg(aggs.head, aggs.tail: _*)
-      .withColumn("__xn", lit(2L) * col("__N") + lit(2L))
-    val statsX = qts.indices.foldLeft(stats0) { (d, i) =>
+    val statsX = qts.indices.foldLeft(withTf.agg(aggs.head, aggs.tail: _*)
+        .withColumn("__xn", lit(2L) * col("__N") + lit(2L))) { (d, i) =>
       d.withColumn(s"__xd$i", lit(2L) * col(s"__df$i") + lit(1L))
     }
-    bm25LogScore(withTf, statsX, idCol, qts.size, k)
-  }
-
-  /** The shared BM25 log-IDF scoring fold: `cands` carries
-    * (idCol, __dl, __tf0..__tf{n-1}), `statsX` is the 1-row corpus
-    * stats (__N, __T, __xn, __xd_i). Extracted so the inline scan
-    * ([[bm25LogTopK]]) and the stored-postings server
-    * ([[bm25LogTopKStored]]) score through the IDENTICAL algebra —
-    * the two forms must be indistinguishable row for row.
-    */
-  private def bm25LogScore(cands: DataFrame, statsX: DataFrame,
-                           idCol: String, nTerms: Int, k: Int): DataFrame = {
-    val dec = "decimal(38,0)"
     val stats = graft.functions.FixedPoint.withLog2(
-      statsX,
-      ("__xn", "__l2n") +: (0 until nTerms).map(i => (s"__xd$i", s"__l2d$i")))
-    val joined = cands.crossJoin(broadcast(stats))
-    val scored = (0 until nTerms).foldLeft(joined) { (d, i) =>
-      val tf = least(col(s"__tf$i"), lit(1048576L)).cast(dec)
-      val n = col("__N").cast(dec)
-      val t = col("__T").cast(dec)
-      val dl = col("__dl").cast(dec)
-      d.withColumn(s"__num$i", lit(10000L).cast(dec) * lit(22L).cast(dec) * tf * t)
-        .withColumn(s"__den$i",
-          lit(10L).cast(dec) * t * tf + lit(3L).cast(dec) * t +
-          lit(9L).cast(dec) * dl * n)
-        .withColumn(s"__c$i", expr(
-          s"(__l2n - __l2d$i) * CAST(__num$i div __den$i AS BIGINT)"))
-    }
-    scored
-      .withColumn("score", (0 until nTerms).map(i => col(s"__c$i")).reduce(_ + _))
+      statsX, ("__xn", "__l2n") +: qts.indices.map(i => (s"__xd$i", s"__l2d$i")))
+    // every term scores through bm25LogTerm, the algebra the stored
+    // server shares: the two forms must agree row for row
+    qts.indices.foldLeft(withTf.crossJoin(broadcast(stats))) { (d, i) =>
+        d.withColumn(s"__c$i", bm25LogTerm(col("__l2n") - col(s"__l2d$i"),
+          col(s"__tf$i"), col("__dl"), col("__N"), col("__T")))
+      }
+      .withColumn("score", qts.indices.map(i => col(s"__c$i")).reduce(_ + _))
       .filter(col("score") > 0)
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), col("__dl").as("dl"), col("score"))
+  }
+
+  /** One term's BM25 log-IDF contribution,
+    *   idf · ⌊10^4 · 22·tf·T / (10·T·tf + 3·T + 9·dl·N)⌋
+    * in decimal(38,0) with tf clamped at 2^20 ([[bm25LogTopK]]'s
+    * algebra), as a BIGINT.
+    */
+  private def bm25LogTerm(idf: Column, tf: Column, dl: Column,
+                          n: Column, t: Column): Column = {
+    val dec = "decimal(38,0)"
+    val tfd = least(tf, lit(1048576L)).cast(dec)
+    val (nd, td, dld) = (n.cast(dec), t.cast(dec), dl.cast(dec))
+    val num = lit(10000L).cast(dec) * lit(22L).cast(dec) * tfd * td
+    val den = lit(10L).cast(dec) * td * tfd + lit(3L).cast(dec) * td +
+      lit(9L).cast(dec) * dld * nd
+    idf * call_function("div", num, den).cast("long")
   }
 
   /** True when a stored postings index can serve BM25 — it carries the
@@ -281,11 +273,18 @@ object Search {
     *  - candidates and term frequencies come from the ≤ ¦terms¦
     *    pruned `tb=` buckets (directory-level PartitionFilters — the
     *    rest of the index is never opened);
-    *  - per-doc lengths, N and T come from the norms sidecar (one row
-    *    per doc, written at build time, maintained by append/remove) —
-    *    the corpus text is never touched;
-    *  - scoring is [[bm25LogScore]], so the ranking is IDENTICAL to
-    *    the inline [[bm25LogTopK]] scan row for row (spec-pinned).
+    *  - N and T come from the norms sidecar, held in the session's
+    *    read handle per on-disk state of the sidecar; per-doc lengths
+    *    come from the norms rows — the corpus text is never touched;
+    *  - the per-term df is ONE collected action, and the IDF is
+    *    computed on the driver with [[graft.functions.FixedPoint.log2fp]],
+    *    the kernel the inline scan's `log2fp` column runs;
+    *  - scoring is one plan in long form, a row per (doc, term) scored
+    *    by [[bm25LogTerm]] and summed per doc: its shape does not depend
+    *    on the term count, and the per-query values (terms, IDF) enter
+    *    as referenced literals, so every request reuses one compiled
+    *    plan. The ranking is IDENTICAL to the inline [[bm25LogTopK]]
+    *    scan row for row (spec-pinned).
     *
     * Requires a norms sidecar; an index written before norms existed
     * must be rebuilt (loud require — a partial answer would silently
@@ -300,8 +299,6 @@ object Search {
     require(norms.exists(),
       s"no norms sidecar at $norms — rebuild the index with writePostings")
     val nBuckets = postingsNBuckets(path)
-    val normsDf = Tables.read(spark, norms.toString)
-    val statsNT = normsDf.agg(count(lit(1)).as("__N"), sum(col("dl")).as("__T"))
     if (postingsIsEmpty(path)) {
       // emptied index: nothing can score — same (id, dl, score) shape
       import org.apache.spark.sql.types._
@@ -312,25 +309,36 @@ object Search {
                        StructField("dl", LongType),
                        StructField("score", LongType))))
     }
+    val normsDf = Tables.read(spark, norms.toString)
+    val (n, t) = Tables.handle(spark, norms.toString, "corpusStats") {
+      val r = normsDf.agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
     val buckets = qts.map(termBucketOf(_, nBuckets)).distinct
-    val pruned = Tables.read(spark, path)
-      .filter(col("tb").isInCollection(buckets))
-      .filter(col("tok").isin(qts: _*))
-    val tfAggs = qts.zipWithIndex.map { case (qt, i) =>
-      sum(when(col("tok") === qt, 1L).otherwise(0L)).as(s"__tf$i")
-    }
-    val cands = pruned.groupBy(col(idCol)).agg(tfAggs.head, tfAggs.tail: _*)
+    val hits = Tables.read(spark, path)
+      .filter(col("tb").isInCollection(buckets) &&
+              array_contains(typedLit(qts), col("tok")))
+      .select(col(idCol), col("tok"))
+    // rows arrive clustered by term, so the distinct count needs no
+    // second exchange
+    val df = hits.repartition(col("tok"))
+      .groupBy(col("tok")).agg(countDistinct(col(idCol)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val l2n = graft.functions.FixedPoint.log2fp(2 * n + 2)
+    val idf = qts.map(q =>
+      q -> (l2n - graft.functions.FixedPoint.log2fp(2 * df.getOrElse(q, 0L) + 1))).toMap
+    // clustered by doc: the (doc, term) count, the norms join and the
+    // per-doc sum all run on one exchange
+    hits.repartition(col(idCol))
+      .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("__tf"))
       .join(normsDf.withColumnRenamed("dl", "__dl"), Seq(idCol))
-    val dfAggs = qts.zipWithIndex.map { case (qt, i) =>
-      countDistinct(when(col("tok") === qt, col(idCol))).as(s"__df$i")
-    }
-    val statsX0 = statsNT.crossJoin(broadcast(
-        pruned.agg(dfAggs.head, dfAggs.tail: _*)))
-      .withColumn("__xn", lit(2L) * col("__N") + lit(2L))
-    val statsX = qts.indices.foldLeft(statsX0) { (d, i) =>
-      d.withColumn(s"__xd$i", lit(2L) * col(s"__df$i") + lit(1L))
-    }
-    bm25LogScore(cands, statsX, idCol, qts.size, k)
+      .withColumn("__c", bm25LogTerm(element_at(typedLit(idf), col("tok")),
+                                     col("__tf"), col("__dl"), lit(n), lit(t)))
+      .groupBy(col(idCol), col("__dl")).agg(sum(col("__c")).as("score"))
+      .filter(col("score") > 0)
+      .orderBy(col("score").desc, col(idCol).asc)
+      .limit(k)
+      .select(col(idCol), col("__dl").as("dl"), col("score"))
   }
 
   /** RECIPROCAL-RANK FUSION — the hybrid-retrieval combiner: merge any
@@ -862,15 +870,35 @@ object Search {
     sha2(concat_ws("|", to_json(queryVec), provider,
                    coalesce(filtersJson, lit("")), k.cast("string")), 256)
 
-  /** Q4 — cache-aside wrapper: probe a persisted cache table by key;
-    * on miss compute via `run` and union the freshly-keyed rows. In
-    * Spark the cache tier is an ordinary table + anti-join, the same
-    * incremental-compute idiom as the embedding cache (E6).
+  /** [[cacheKey]] of one unfiltered request, evaluated on the driver:
+    * over a one-row local relation the optimizer folds the key to a
+    * literal, so no Spark job runs and the string is the column's,
+    * byte for byte.
+    */
+  def cacheKeyOf(spark: org.apache.spark.sql.SparkSession, queryVec: Seq[Float],
+                 provider: String, k: Int): String = {
+    import spark.implicits._
+    Seq(0).toDF("__one")
+      .select(cacheKey(typedLit(queryVec), lit(provider), lit(null).cast("string"), lit(k)))
+      .as[String].head()
+  }
+
+  /** Q4 — cache-aside wrapper: ONE collect of the key's rows from the
+    * persisted cache table; non-empty is a hit. A miss collects `run`
+    * once and keys its rows. Either way the rows come back as a local
+    * frame, so the caller's reads (and the append of a miss) never
+    * re-run the probe or the search.
     */
   def cachedSearch(cache: DataFrame, key: String, run: () => DataFrame): (DataFrame, Boolean) = {
-    val hit = cache.filter(col("cache_key") === key)
-    if (hit.limit(1).count() > 0) (hit, true)
-    else (run().withColumn("cache_key", lit(key)), false)
+    def local(rows: Array[org.apache.spark.sql.Row],
+              schema: org.apache.spark.sql.types.StructType) =
+      cache.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val hit = cache.filter(col("cache_key") === key).collect()
+    if (hit.nonEmpty) (local(hit, cache.schema), true)
+    else {
+      val miss = run().withColumn("cache_key", lit(key))
+      (local(miss.collect(), miss.schema), false)
+    }
   }
 
   /** Q4 — cache invalidation (`services/search_cache.py:64-71`, Redis

@@ -64,6 +64,14 @@ class IvfPqMaintenanceSpec extends SparkSpec {
       k = k, nprobe = nprobe, rerankFactor = 3, m = m, dims = dims)
       .collect().map(_.toSeq).toSeq
 
+  /** The cells a stored probe at nprobe 2 reads over `ids`: more than
+    * two when its best cells hold fewer than k rows ([[Ann.probeCells]]).
+    */
+  private def widened(ids: Seq[Long], q: Seq[Long], k: Int = 5): Int =
+    Ann.probeCells(codebooks, q, 2, k,
+      Ann.ivfAssignInt(mkEmb(ids), "embedding", codebooks)
+        .groupBy($"cell").count().as[(Long, Long)].collect().toMap).size
+
   private def writeBase(path: String): Unit =
     Ann.ivfPqWriteIndex(mkEmb(baseIds), "vec_id", "embedding",
                         codebooks, codebooks, path, m, dims)
@@ -90,11 +98,10 @@ class IvfPqMaintenanceSpec extends SparkSpec {
     }
     // the stored probe's plan discipline survives the append: pruning
     // on both tiers, ADC scan reads codes not vectors
-    val plan = Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
-                                   codebooks, codebooks, qv(0L),
-                                   k = 5, nprobe = 2, rerankFactor = 3,
-                                   m = m, dims = dims)
-      .queryExecution.executedPlan.toString
+    val plan = planText(Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
+                                            codebooks, codebooks, qv(0L),
+                                            k = 5, nprobe = 2, rerankFactor = 3,
+                                            m = m, dims = dims))
     val prunedScans = plan.linesIterator.count(l =>
       l.contains("PartitionFilters") && l.contains("cell") && l.contains("IN"))
     assert(prunedScans >= 2,
@@ -133,7 +140,7 @@ class IvfPqMaintenanceSpec extends SparkSpec {
     }
     val kept = ids.filterNot(removedIds.contains)
     Seq(0L, 7L, 13L).foreach { qi =>
-      assert(stored(path, qv(qi)) == inMem(kept, qv(qi)),
+      assert(stored(path, qv(qi)) == inMem(kept, qv(qi), nprobe = widened(kept, qv(qi))),
              s"index after removal must answer query $qi as a rebuild over kept rows")
     }
   }
@@ -155,11 +162,10 @@ class IvfPqMaintenanceSpec extends SparkSpec {
 
     assert(Seq(0L, 7L, 13L).map(qi => stored(path, qv(qi))) == beforeProbe,
            "compaction must not change probe results")
-    val plan = Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
-                                   codebooks, codebooks, qv(0L),
-                                   k = 5, nprobe = 2, rerankFactor = 3,
-                                   m = m, dims = dims)
-      .queryExecution.executedPlan.toString
+    val plan = planText(Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
+                                            codebooks, codebooks, qv(0L),
+                                            k = 5, nprobe = 2, rerankFactor = 3,
+                                            m = m, dims = dims))
     val prunedScans = plan.linesIterator.count(l =>
       l.contains("PartitionFilters") && l.contains("cell") && l.contains("IN"))
     assert(prunedScans >= 2,

@@ -182,7 +182,7 @@ class KmeansSpec extends SparkSpec {
            "the stored serving path must be indistinguishable from the in-memory stack")
     // the stored probe's plan discipline: both tiers prune to the
     // probed cells, and the ADC tier reads codes, never vectors
-    val plan = stored.queryExecution.executedPlan.toString
+    val plan = planText(SparkEntry.queries("q141_trained_search_stored")(spark, Sf001))
     val prunedScans = plan.linesIterator.count(l =>
       l.contains("PartitionFilters") && l.contains("cell") && l.contains("IN"))
     assert(prunedScans >= 2,

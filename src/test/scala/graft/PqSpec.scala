@@ -126,10 +126,9 @@ class PqSpec extends SparkSpec {
     assert(stored.collect().map(_.toSeq).toSeq == inMem.collect().map(_.toSeq).toSeq,
            "stored probe must equal the in-memory composition")
 
-    val plan = Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
-                                   codebooks, codebooks, qv,
-                                   k = 5, nprobe = 2, rerankFactor = 3)
-      .queryExecution.executedPlan.toString
+    val plan = planText(Ann.ivfPqTopKStored(spark, path, "vec_id", "embedding",
+                                            codebooks, codebooks, qv,
+                                            k = 5, nprobe = 2, rerankFactor = 3))
     // BOTH scans (ADC stage and re-rank fetch) prune to the probed
     // cells — a single match would let one tier full-scan silently
     val prunedScans = plan.linesIterator.count(l =>

@@ -251,6 +251,9 @@ class ReadHandleSpec extends AnyFunSuite {
   }
 
   test("warm search requests start no listing or schema-inference job") {
+    // a ranking collected, then content fetched by id: no join, so no
+    // adaptive stage, and each kind stays under its job ceiling
+    val ceiling = Map("ann" -> 3, "knn" -> 2, "bm25" -> 6)
     val requests = Seq[(String, String => Seq[String])](
       "ann" -> (q => Main.runSearchAnn(spark, store, q, 3)),
       "knn" -> (q => Main.runSearch(spark, store, q, "nomic", 3)),
@@ -258,10 +261,53 @@ class ReadHandleSpec extends AnyFunSuite {
       "hybrid" -> (q => Main.runSearchHybrid(spark, store, q, 3)))
     requests.foreach { case (_, run) => assert(run("spark shuffle").nonEmpty) }
     requests.foreach { case (kind, run) =>
-      val (out, sites) = jobSites(run("bread and butter"))
+      val ((out, sites), ran) =
+        SparkSpec.executedPlans(spark)(jobSites(run("bread and butter")))
       assert(out.nonEmpty, s"$kind served nothing")
       assert(!sites.exists(_.startsWith("parquet at")),
              s"warm $kind request re-resolved a table: $sites")
+      ceiling.get(kind).foreach(n => assert(sites.size <= n,
+        s"warm $kind request started ${sites.size} jobs, ceiling $n: $sites"))
+      if (kind == "hybrid")
+        assert(!ran.exists(_.contains("chunks.parquet")),
+               s"hybrid read the chunk text: ${ran.mkString("\n")}")
+    }
+    // knn_cached: a miss probes, searches and appends its rows; a hit is
+    // the probe alone
+    val ((missLines, missHit), miss) =
+      jobSites(Main.runSearchCached(spark, store, "bread and butter", "nomic", 3))
+    assert(!missHit && missLines.nonEmpty)
+    assert(miss.size <= 3 && miss.count(_.startsWith("parquet at")) <= 1,
+           s"a cache miss started ${miss.size} jobs: $miss")
+    val ((hitLines, hit), sites) =
+      jobSites(Main.runSearchCached(spark, store, "bread and butter", "nomic", 3))
+    assert(hit && hitLines == missLines)
+    assert(sites.size <= 1, s"a cache hit started ${sites.size} jobs: $sites")
+  }
+
+  test("hybrid's lexical tier is runSearchBm25's log-IDF ranking") {
+    // a postings-only store: with no vector index, hybrid fuses the
+    // lexical list alone, so its order is that list's order
+    val in = new File(tmp("graft_rh_hyb_in"))
+    val lex = tmp("graft_rh_hyb_store")
+    Seq("a.md" -> "rare notes on windy lakes and sailing boats with knots for cooking days",
+        "b.md" -> "common common common common words here and there again",
+        "c.md" -> "common thread",
+        "d.md" -> "vector index probes",
+        "e.md" -> "bread and butter")
+      .foreach { case (n, t) => Files.writeString(new File(in, n).toPath, t) }
+    Main.runIngest(spark, in.toString, lex, "nomic", now)
+    Main.runBuildPostings(spark, lex, 8)
+    def field(l: String, f: String) = s""""$f":"([^"]*)"""".r.findFirstMatchIn(l).get.group(1)
+    val bm25 = Main.runSearchBm25(spark, lex, "common rare", 5)
+    // log IDF ranks the short all-"common" chunk above the long "rare"
+    // one; the rational IDF ranked them the other way round
+    assert(bm25.map(field(_, "content").split(" ").head) == Seq("common", "common", "rare"),
+           bm25.mkString("\n"))
+    val hybrid = Main.runSearchHybrid(spark, lex, "common rare", 5)
+    assert(hybrid.map(field(_, "chunk_id")) == bm25.map(field(_, "chunk_id")))
+    hybrid.zipWithIndex.foreach { case (l, i) =>
+      assert(l.contains(s""""rrf_score":${1000000 / (61 + i)},""") && l.contains("\"n_lists\":1"), l)
     }
   }
 

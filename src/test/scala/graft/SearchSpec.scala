@@ -1,7 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.embed.Embedding
 import graft.search.Search
 
 class SearchSpec extends SparkSpec {
@@ -106,5 +113,35 @@ class SearchSpec extends SparkSpec {
     val keys = df.select(Search.cacheKey($"vec", $"provider", lit(null), $"k")).as[String].collect()
     assert(keys.distinct.length == 2)
     assert(keys.forall(_.matches("[0-9a-f]{64}")))
+  }
+
+  test("cacheKeyOf: the driver-side key equals cacheKey evaluated by a Spark job, and starts none") {
+    val vecs = Seq(Seq(0.1f, -0.25f, 3.0f), Seq.fill(8)(1e-7f),
+                   Embedding.embedQuery("spark shuffle", "nomic").toSeq)
+    val schema = StructType(Seq(StructField("vec", ArrayType(FloatType, false)),
+                                StructField("k", IntegerType)))
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    for (v <- vecs; k <- Seq(1, 3, 10)) {
+      // the form persisted caches were keyed with, and the key column
+      // computed row-wise in a job over a non-local frame
+      val folded = spark.range(1)
+        .select(Search.cacheKey(typedLit(v), lit("nomic"), lit(null).cast("string"), lit(k)))
+        .as[String].head()
+      val byJob = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(v, k)), 1), schema)
+        .select(Search.cacheKey($"vec", lit("nomic"), lit(null).cast("string"), $"k"))
+        .as[String].head()
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val onDriver = try {
+        val key = Search.cacheKeyOf(spark, v, "nomic", k)
+        ListenerBusDrain(spark.sparkContext)
+        key
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(onDriver == folded && onDriver == byJob, s"vec $v, k $k")
+    }
+    assert(jobs.get == 0, s"the driver-side key started ${jobs.get} jobs")
   }
 }

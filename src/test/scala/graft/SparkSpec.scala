@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -10,6 +17,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val Sf001 = "/root/testdata/sf0.001"
   val Sf01 = "/root/testdata/sf0.01"
   override def afterAll(): Unit = () // session shared across suites
+
+  /** Plan text of an operator that runs a step eagerly: the executed
+    * plans of the queries `op` ran while building its frame, then the
+    * returned frame's plan.
+    */
+  protected def planText(op: => DataFrame): String = {
+    val (df, ran) = SparkSpec.executedPlans(spark)(op)
+    (ran :+ df.queryExecution.executedPlan.toString).mkString("\n")
+  }
 
   /** Byte-identity snapshot of a stored index tree: relative path →
     * file length, data files only. Shared by the index-maintenance
@@ -57,4 +73,21 @@ object SparkSpec {
     .config("spark.sql.warehouse.dir",
             java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
+
+  /** `body`'s result and the executed plans of the queries it ran. */
+  def executedPlans[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val ran = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, ran.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

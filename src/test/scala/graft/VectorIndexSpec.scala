@@ -132,4 +132,24 @@ class VectorIndexSpec extends SparkSpec {
     assert((a2, r2) == (10L, 0L))
     assert(indexIds(path) == ids.map(i => s"c$i").toSet)
   }
+
+  test("a probe whose best cells hold fewer than k rows widens in rank order until k rows come back") {
+    // two rows per cell; nprobe 1 reads one cell
+    val path = newIdx()
+    VectorIndex.reconcile(spark, path, slice(0L until 10L), "chunk_id", "embedding")
+    val q = vec(3L).map(Ann.quantizeL)
+    def probe(k: Int): Seq[(String, Long)] =
+      VectorIndex.topK(spark, path, VectorIndex.readMeta(path), "chunk_id", "embedding",
+                       q, k = k, nprobe = 1)
+        .select($"chunk_id", $"cell").as[(String, Long)].collect().toSeq
+    // the best cell holds k rows: it is the only cell read
+    assert(probe(2).map(_._1).toSet == Set("c3", "c8"))
+    // it does not: the next cells in rank order join until k rows do
+    val wide = probe(5)
+    assert(wide.size == 5, s"a 5-row request over 10 rows got $wide")
+    assert(wide.take(2).map(_._1).toSet == Set("c3", "c8"), s"nearest first: $wide")
+    assert(wide.map(_._2).distinct.size == 3, s"three cells hold 5 rows: $wide")
+    // more than the index holds: every cell, every row
+    assert(probe(50).map(_._1).toSet == (0L until 10L).map(i => s"c$i").toSet)
+  }
 }
