@@ -2556,16 +2556,16 @@ object Main {
     * is blind (paraphrases beat BM25; exact identifiers beat
     * embeddings), and RRF is the rank-level fusion that needs no score
     * calibration between them. Both rankings are collected first and
-    * fused as local rows. Emits (chunk_id, rrf_score, n_lists):
-    * n_lists = 2 marks hits both tiers agree on.
+    * fused on the driver ([[Search.rrfFuseRows]], no job; the store's
+    * chunk ids are ASCII, so String order is Spark's byte order). Emits
+    * (chunk_id, rrf_score, n_lists): n_lists = 2 marks hits both tiers
+    * agree on.
     */
   def runSearchHybrid(spark: SparkSession, storeDir: String, query: String,
                       k: Int, nprobe: Int = 2): Seq[String] = {
     import graft.search.{Ann, VectorIndex}
     import spark.implicits._
-    def ranks(ids: Seq[String]): DataFrame =
-      ids.zipWithIndex.map { case (id, i) => (id, i + 1L) }.toDF("chunk_id", "rank")
-    val sparse = ranks(bm25Ranking(spark, storeDir, query, k).map(_.getString(0)))
+    val sparse = bm25Ranking(spark, storeDir, query, k).map(_.getString(0))
     val rankings =
       if (!VectorIndex.servable(storeDir)) Seq(sparse)
       else {
@@ -2573,17 +2573,13 @@ object Main {
         val meta = VectorIndex.readMeta(path)
         val qv = Embedding.embedQuery(query, meta.provider).toSeq
           .map(Ann.quantizeL)
-        Seq(sparse, ranks(VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
-                                           qv, k, nprobe)
-                            .select(col("chunk_id")).as[String].collect().toSeq))
+        Seq(sparse, VectorIndex.topK(spark, path, meta, "chunk_id", "embedding",
+                                     qv, k, nprobe)
+                      .select(col("chunk_id")).as[String].collect().toSeq)
       }
-    Search.rrfFuse(rankings, "chunk_id", "rank", k = k)
-      .orderBy(col("rrf_score").desc, col("chunk_id"))
-      .collect().map { r =>
-        s"""{"chunk_id":"${r.getAs[String]("chunk_id")}",""" +
-        s""""rrf_score":${r.getAs[Long]("rrf_score")},""" +
-        s""""n_lists":${r.getAs[Long]("n_lists")}}"""
-      }.toSeq
+    Search.rrfFuseRows(rankings, k = k).map { case (id, score, n) =>
+      s"""{"chunk_id":"$id","rrf_score":$score,"n_lists":$n}"""
+    }
   }
 
   /** `postings <store> [nBuckets]`: build (or rebuild) the stored

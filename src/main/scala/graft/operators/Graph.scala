@@ -194,7 +194,9 @@ object Graph {
         .select(col("dst").as("node"), col("plabel"),
                 lit(r.toLong).as("round"))
         .join(lab.select(col("node")), Seq("node"), "left_anti")
-      lab = lab.unionByName(newly).localCheckpoint()
+      // capStats: a round joins the last pin twice, and the new pin
+      // inherits that product estimate (past Long.MaxValue by round 8)
+      lab = graft.io.Pins.capStats(lab.unionByName(newly).localCheckpoint())
     }
     lab
   }

@@ -370,6 +370,24 @@ object Search {
       .limit(k)
   }
 
+  /** [[rrfFuse]]'s algebra over rankings already collected to the
+    * driver — each a list of ids in rank order (rank = position + 1) —
+    * for a caller that holds a few short lists and needs no job to
+    * fuse them: `1000000 div (kRrf + rank)` summed per id, `n_lists`
+    * the id's occurrences, ordered by score desc then id asc, top k.
+    * Rows are (id, rrf_score, n_lists), exactly [[rrfFuse]]'s.
+    */
+  def rrfFuseRows[A: Ordering](rankings: Seq[Seq[A]], k: Int = 10,
+                               kRrf: Int = 60): Seq[(A, Long, Long)] = {
+    require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
+    rankings.flatMap(_.zipWithIndex.map { case (id, i) =>
+        (id, 1000000L / (kRrf + i + 1L)) })
+      .groupMapReduce(_._1)(c => (c._2, 1L)) { case ((s, n), (t, m)) => (s + t, n + m) }
+      .toSeq.map { case (id, (score, n)) => (id, score, n) }
+      .sortBy { case (id, score, _) => (-score, id) }
+      .take(k)
+  }
+
   /** Q3 extension — PHRASE search over the positional structure the
     * `\W+` token model induces: documents containing the exact
     * consecutive token sequence `phrase`, with the occurrence count and

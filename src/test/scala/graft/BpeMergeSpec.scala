@@ -73,6 +73,19 @@ class BpeMergeSpec extends SparkSpec {
     assert(short == Seq((1L, "x", "y", 2L)), short.toString)
   }
 
+  test("bpeTrain: a round's pin keeps its size estimate within Long.MaxValue") {
+    // the CLI tokenizer runs 16 rounds, the queries 3; 20 merges exist
+    // in these two 11-letter words
+    val docs = Seq("abcdefghijk lmnopqrstuv abcdefghijk").toDF("text")
+    val (merges, vocab) = TextStats.bpeTrainWithVocab(docs, "text", rounds = 20)
+    val sizes = vocab.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+    }
+    assert(merges.count() == 20L)
+    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
+    graft.io.Pins.release(vocab)
+  }
+
   test("bpeApply: ordered merges compress per-doc token counts, partial merges exact") {
     val docs = Seq(("d1", "aaaa aaaa ab"), ("d2", "aab a")).toDF("doc_id", "text")
     val merges = Seq(("a", "a"), ("aa", "aa"), ("a", "b"))

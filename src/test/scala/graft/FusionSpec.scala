@@ -37,6 +37,21 @@ class FusionSpec extends SparkSpec {
     assert(got == Seq((5L, c(1) + c(2), 2L), (6L, c(1) + c(2), 2L)))
   }
 
+  test("rrfFuseRows ≡ rrfFuse over random lists with overlaps and ties") {
+    val rnd = new scala.util.Random(17)
+    // ids from a small space, so lists overlap and equal rank sums tie;
+    // the first case ties 5 and 7 outright
+    val cases = (Seq(Seq(7L, 5L), Seq(5L, 7L), Seq(6L)), 3) +:
+      Seq.fill(8)((Seq.fill(1 + rnd.nextInt(3))(
+        rnd.shuffle((1L to 9L).toList).take(rnd.nextInt(8))), 1 + rnd.nextInt(6)))
+    cases.zipWithIndex.foreach { case ((lists, k), trial) =>
+      val frames = lists.map(l => rank(l.zipWithIndex.map { case (id, i) => (id, i + 1L) }))
+      val want = Search.rrfFuse(frames, "doc_id", "rnk", k = k)
+        .as[(Long, Long, Long)].collect().toSeq
+      assert(Search.rrfFuseRows(lists, k = k) == want, s"trial $trial: $lists")
+    }
+  }
+
   test("plan: no cartesian, no UDF, one aggregate over the unioned lists") {
     // lists larger than k, or EliminateLimits folds the top-k away and
     // the TakeOrderedAndProject assertion can't see it

@@ -160,4 +160,19 @@ class GraphSpec extends SparkSpec {
     assert(out.find(_._1 == 5L).contains((5L, "x", 1L)), out.toString)
     assert(out.find(_._1 == 7L).contains((7L, "y", 1L)), out.toString)
   }
+
+  test("label propagation: a round's pin keeps its size estimate within Long.MaxValue") {
+    // each round joins the last pin twice and pins the result; q168
+    // runs 2 rounds, this runs 8 along a path that keeps every round busy
+    val path = (1L to 12L).map(i => (i, i + 1))
+    val lab = Graph.labelPropagate(path.toDF("a", "b"), "a", "b",
+                                   Seq(1L -> "x").toDF("id", "lab"), "id", "lab",
+                                   iters = 8)
+    val sizes = lab.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+    }
+    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
+    assert(lab.count() == 9L)
+    graft.io.Pins.release(lab)
+  }
 }

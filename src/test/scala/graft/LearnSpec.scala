@@ -222,6 +222,42 @@ class LearnSpec extends SparkSpec {
     }
   }
 
+  test("job guard: each regression entry point reads its input in one pass") {
+    // one histogram aggregate, collected: its shuffle map stage and the
+    // collect are the two jobs; no round, pin or cell score adds one
+    val df = (1L to 120L).map(i => (i % 5, i % 3, (i * 37) % 101))
+      .toDF("a", "b", "y")
+    val feats = Seq("a", "b")
+    val dir = java.nio.file.Files.createTempDirectory("graft_boost_jobs")
+    Learn.boostTrainModel(df, feats, "y").write.parquet(s"$dir/m")
+    val stored = spark.read.parquet(s"$dir/m")
+    val jobs = Seq[(String, Int, () => Any)](
+      ("trainRegressionStump", 2, () => Learn.trainRegressionStump(df, feats, "y").collect()),
+      ("boostStumps", 2, () => Learn.boostStumps(df, feats, "y").collect()),
+      ("boostFittedValues", 2, () => Learn.boostFittedValues(df, feats, "y").collect()),
+      ("boostTrainModel", 2, () => Learn.boostTrainModel(df, feats, "y").collect()),
+      // plus one scan of the stored model
+      ("boostScoreCells", 3, () => Learn.boostScoreCells(df, feats, "y", stored).collect())
+    ).map { case (name, ceiling, run) =>
+      (name, ceiling, SparkSpec.jobSites(spark)(run())._2.size)
+    }
+    assert(jobs.forall { case (_, ceiling, n) => n <= ceiling }, jobs)
+  }
+
+  test("boosting fails loudly where a residual square overflows a long, never wraps") {
+    // one cell, y = ±3.5·10^9: p0 = 0, and each residual square
+    // (1.2·10^19) is past Long.MaxValue
+    val df = Seq((0L, 3500000000L), (0L, -3500000000L)).toDF("a", "y")
+    def chain(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+    Seq[() => Any](() => Learn.boostStumps(df, Seq("a"), "y", rounds = 1).collect(),
+                   () => Learn.boostFittedValues(df, Seq("a"), "y", rounds = 1).collect())
+      .foreach { run =>
+        val e = intercept[Exception](run())
+        assert(chain(e).exists(_.isInstanceOf[ArithmeticException]), e)
+      }
+  }
+
   test("plan: one corpus pass, histogram-sized windows, no cartesian/UDF") {
     val df = (1L to 100L).map(i => (i % 13, i % 7, if (i % 2 == 0) 1L else -1L))
       .toDF("a", "b", "y")

@@ -4,12 +4,9 @@ import java.io.File
 import java.lang.ref.WeakReference
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -49,20 +46,8 @@ class ReadHandleSpec extends AnyFunSuite {
     assert(rows(handle) == rows(spark.read.parquet(path)), s"stale frame for $path")
 
   /** Short call sites of the jobs `body` starts. */
-  private def jobSites[A](body: => A): (A, Seq[String]) = {
-    val sites = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sites.add(if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusDrain(spark.sparkContext)
-      (out, sites.asScala.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobSites[A](body: => A): (A, Seq[String]) =
+    SparkSpec.jobSites(spark)(body)
 
   /** A small served store: ingest, postings and vector index. */
   private def builtStore(): String = {
@@ -253,7 +238,7 @@ class ReadHandleSpec extends AnyFunSuite {
   test("warm search requests start no listing or schema-inference job") {
     // a ranking collected, then content fetched by id: no join, so no
     // adaptive stage, and each kind stays under its job ceiling
-    val ceiling = Map("ann" -> 3, "knn" -> 2, "bm25" -> 6)
+    val ceiling = Map("ann" -> 3, "knn" -> 2, "bm25" -> 6, "hybrid" -> 7)
     val requests = Seq[(String, String => Seq[String])](
       "ann" -> (q => Main.runSearchAnn(spark, store, q, 3)),
       "knn" -> (q => Main.runSearch(spark, store, q, "nomic", 3)),

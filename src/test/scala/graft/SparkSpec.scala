@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -73,6 +74,22 @@ object SparkSpec {
     .config("spark.sql.warehouse.dir",
             java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
+
+  /** `body`'s result and the short call sites of the jobs it started. */
+  def jobSites[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
+    val sites = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, sites.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   /** `body`'s result and the executed plans of the queries it ran. */
   def executedPlans[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
