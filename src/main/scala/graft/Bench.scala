@@ -52,25 +52,27 @@ object Bench {
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     val samples = (0 until runs).flatMap { _ =>
       names.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // An erroring query fails fast (~0.1 s) — recording that wall
-        // time as a run time would read as a phantom 10× speedup in a
-        // cross-round diff, so keep time and error disjoint: a failed
-        // run yields an error message, never a timing.
-        // NonFatal only: an OOM/linkage error means the JVM is damaged
-        // and every later timing would be garbage — crash the bench
-        // (driver sees rc != 0) rather than record corrupted medians
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case scala.util.control.NonFatal(e) =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release localCheckpoint pins between runs — each timed run
-        // re-pins (the pin cost is part of the query), and without the
-        // sweep the runs×queries loop accumulates storage all session.
-        // BLOCKING: we are outside the timed window here, and an async
-        // teardown would overlap (and noise) the next sample's t0.
-        graft.io.Pins.sweepAll(spark, blocking = true)
+        // the scope frees the run's pins — each timed run re-pins (the
+        // pin cost is part of the query), and without it the
+        // runs×queries loop accumulates storage all session.
+        // BLOCKING: the teardown runs after `dt` is taken, outside the
+        // timed window, and an async one would overlap (and noise) the
+        // next sample's t0.
+        val (err, dt) = graft.io.Pins.scope({
+          val t0 = System.nanoTime()
+          // An erroring query fails fast (~0.1 s) — recording that wall
+          // time as a run time would read as a phantom 10× speedup in a
+          // cross-round diff, so keep time and error disjoint: a failed
+          // run yields an error message, never a timing.
+          // NonFatal only: an OOM/linkage error means the JVM is damaged
+          // and every later timing would be garbage — crash the bench
+          // (the harness sees rc != 0) rather than record corrupted medians
+          val err = try { fn(spark, sfDir).count(); None } catch {
+            case scala.util.control.NonFatal(e) =>
+              Some(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))
+          }
+          (err, (System.nanoTime() - t0) / 1e9)
+        }, blocking = true)
         name -> err.toLeft(dt)
       }
     }

@@ -11,7 +11,8 @@ import graft.chunk.Chunkers
 import graft.chunk.Chunkers.{ChunkerConfig, Strategy}
 import graft.embed.Embedding
 import graft.ingest.Ingest
-import graft.io.Tables
+import graft.io.{Pins, Tables}
+import graft.io.Pins.pin
 import graft.jobs.JobLedger
 import graft.metrics.Metrics
 import graft.search.Search
@@ -385,7 +386,7 @@ object Main {
       // capture, the dedup clustering's per-round label tables) is its
       // scratch, freed on return AND on failure — a long-lived session
       // (the --follow consumer) must not accumulate pins per batch
-      graft.io.Pins.sweepingNew(spark) {
+      Pins.scope {
         // One row per doc_id: the same file delivered twice in one batch
         // (same bytes + filename under two paths → one id; rows identical
         // since `now` is batch-constant) is ONE upload. Without this the
@@ -424,7 +425,7 @@ object Main {
       if (docsTablePath0.exists())
         Some(spark.read.parquet(docsTablePath0.toString)
           .filter($"status" === Schemas.DocumentStatus.Removed)
-          .select($"doc_id").localCheckpoint(true))
+          .select($"doc_id")).map(pin(_))
       else None
     val docs = removedIds match {
       case Some(r) => docsAll.join(r, Seq("doc_id"), "left_anti")
@@ -461,8 +462,8 @@ object Main {
     // stored doc outscored by an arriving near-dup is DEMOTED: its
     // documents row flips to 'duplicate' and its chunks/embeddings/
     // signatures are pruned from the store.
-    val sigsNew = graft.dedup.Dedup.minhashSignatures(ok, "doc_id", "text", nBands = 4)
-      .localCheckpoint(true) // probed 3× below; one shingle pass, not three
+    // probed 3× below; one shingle pass, not three
+    val sigsNew = pin(graft.dedup.Dedup.minhashSignatures(ok, "doc_id", "text", nBands = 4))
     val sigPath = new java.io.File(s"$storeDir/signatures.parquet")
     val storedSigs =
       if (sigPath.exists()) spark.read.parquet(sigPath.toString)
@@ -480,15 +481,14 @@ object Main {
       .distinct()
       .join(involved, Seq("doc_id"), "left_semi")
       .join(batchNodes, Seq("doc_id"), "left_anti") // re-ingested doc: fresh score
-    val dupFlags = graft.dedup.Dedup.keepOne(
+    // six downstream actions consume these flags (both prunes,
+    // docsOut, demotion, signature write) — pin once or each re-runs
+    // the LSH aggregation + stored-signature probe; freed with
+    // ingestBatch's scope
+    val dupFlags = pin(graft.dedup.Dedup.keepOne(
         batchNodes.unionByName(storedNodes), "doc_id", col("__score"),
         pairs, "a_id", "b_id")
-      .select($"doc_id", $"comp", $"keep")
-      // six downstream actions consume these flags (both prunes,
-      // docsOut, demotion, signature write) — pin once or each re-runs
-      // the LSH aggregation + stored-signature probe; freed by
-      // ingestBatch's sweep
-      .localCheckpoint(true)
+      .select($"doc_id", $"comp", $"keep"))
     val kept = ok.join(dupFlags.filter($"keep"), Seq("doc_id"), "left_semi")
     // a doc KEPT by an earlier run can be demoted to duplicate when a
     // better cluster member arrives — its stored chunks/embeddings must
@@ -527,8 +527,8 @@ object Main {
         Some(openTable(spark, storeDir, "chunks")
           .join(stale.select($"doc_id".as("__sd")),
                 substring($"chunk_id", 1, 64) === $"__sd", "left_semi")
-          .select($"doc_id", $"chunk_id", $"content", $"strategy")
-          .localCheckpoint(true))
+          .select($"doc_id", $"chunk_id", $"content", $"strategy"))
+          .map(pin(_))
       } else None
     val postingsRemovals =
       if (postingsPath.exists)
@@ -567,8 +567,7 @@ object Main {
               Seq("chunk_id"), "left_outer")
         .select($"chunk_id", $"__new".isNull.as("__orphan"),
                 ($"__new".isNotNull && !($"__new" <=> $"__old")).as("__changed"))
-        .filter($"__orphan" || $"__changed")
-        .localCheckpoint(true))
+        .filter($"__orphan" || $"__changed")).map(pin(_))
     val staleDropIds = staleProbe.map(_.filter($"__orphan").select($"chunk_id"))
 
     // STALE-VECTOR ERASURE leaves BEFORE the chunks commit — the
@@ -598,14 +597,11 @@ object Main {
       if (search.VectorIndex.exists(storeDir)) {
         val vecPath = search.VectorIndex.indexPath(storeDir)
         Tables.withTableLock(vecPath) {
-          val idxRows = spark.read.parquet(vecPath)
+          val idxRows = pin(spark.read.parquet(vecPath)
             .withColumn("cell", col("cell").cast("long"))
             .join(ci, Seq("chunk_id"), "left_semi")
-            .select($"chunk_id", $"cell")
-            .localCheckpoint(true)
-          try search.Ann.ivfRemoveFromIndex(spark, vecPath, idxRows,
-                                            "chunk_id")
-          finally graft.io.Pins.release(idxRows)
+            .select($"chunk_id", $"cell"))
+          search.Ann.ivfRemoveFromIndex(spark, vecPath, idxRows, "chunk_id")
         }
       }
     }
@@ -621,7 +617,7 @@ object Main {
     // swapped-away files exists; spill goes to disk, never back to
     // the dead listing.
     val chunksObserved =
-      if (streaming) chunked.localCheckpoint(true)
+      if (streaming) pin(chunked)
       else Metrics.observeChunkSizes(chunked, chunkObs)
 
     val (_, tChunks) = Metrics.timed {
@@ -693,7 +689,7 @@ object Main {
           openTable(spark, storeDir, "embeddings"), providerName, now = now)
       else Embedding.embedChunksDistinct(storedChunks, providerName, now = now)
     val embedded =
-      if (streaming) embeddedRaw.localCheckpoint(true) // see chunksObserved
+      if (streaming) pin(embeddedRaw) // see chunksObserved
       else Metrics.observeEmbedding(embeddedRaw, embedObs)
     val (_, tEmbed) = Metrics.timed {
       writeTable(spark, embedded, storeDir, "embeddings",
@@ -1231,7 +1227,7 @@ object Main {
                 redact: Boolean = false,
                 targetDir: Option[String] = None,
                 gopherMinWords: Option[Int] = None,
-                semDedup: Boolean = false): String = {
+                semDedup: Boolean = false): String = Pins.scope {
     import graft.dedup.Dedup
     val docs = openTable(spark, storeDir, "documents")
       .filter(!col("status").isin(Schemas.DocumentStatus.Dead: _*))
@@ -1757,32 +1753,30 @@ object Main {
     // lock (it runs concurrent with ingest by design), so a lazy read
     // would re-list the parquet dir at action time and die (or judge a
     // mixed state) when an ingest swap lands mid-audit
-    val docs = docsOpt.get.localCheckpoint(true)
-    val chunksOpt = tbl("chunks").map(_.localCheckpoint(true))
-    val embOpt = tbl("embeddings").map(_.localCheckpoint(true))
-    val sigsOpt = tbl("signatures").map(_.localCheckpoint(true))
-    val jobsOpt = tbl("jobs").map(_.localCheckpoint(true))
-    // derived-tier snapshots are pinned ONLY when the partner table
-    // their checks join against exists — otherwise the checks are
-    // skipped and the pin would be pure wasted executor memory
-    val postingsF = new java.io.File(s"$storeDir/postings.idx")
-    val postingsOpt =
-      if (chunksOpt.isDefined && postingsF.exists())
-        Some(spark.read.parquet(postingsF.toString)
-          .select(col("chunk_id")).localCheckpoint(true))
-      else None
-    val vecOpt =
-      if (embOpt.isDefined && VectorIndex.exists(storeDir)) {
-        val vecPath = VectorIndex.indexPath(storeDir)
-        val idx =
-          if (VectorIndex.hasCells(vecPath))
-            Some(spark.read.parquet(vecPath)
-              .select(col("chunk_id")).localCheckpoint(true))
-          else None
-        Some((VectorIndex.readMeta(vecPath).provider, idx))
-      } else None
-    val checks = scala.collection.mutable.ArrayBuffer[(String, Long, Boolean)]()
-    try {
+    Pins.scope {
+      val docs = pin(docsOpt.get)
+      val chunksOpt = tbl("chunks").map(pin(_))
+      val embOpt = tbl("embeddings").map(pin(_))
+      val sigsOpt = tbl("signatures").map(pin(_))
+      val jobsOpt = tbl("jobs").map(pin(_))
+      // derived-tier snapshots are pinned ONLY when the partner table
+      // their checks join against exists — otherwise the checks are
+      // skipped and the pin would be pure wasted executor memory
+      val postingsF = new java.io.File(s"$storeDir/postings.idx")
+      val postingsOpt =
+        if (chunksOpt.isDefined && postingsF.exists())
+          Some(pin(spark.read.parquet(postingsF.toString).select(col("chunk_id"))))
+        else None
+      val vecOpt =
+        if (embOpt.isDefined && VectorIndex.exists(storeDir)) {
+          val vecPath = VectorIndex.indexPath(storeDir)
+          val idx =
+            if (VectorIndex.hasCells(vecPath))
+              Some(pin(spark.read.parquet(vecPath).select(col("chunk_id"))))
+            else None
+          Some((VectorIndex.readMeta(vecPath).provider, idx))
+        } else None
+      val checks = scala.collection.mutable.ArrayBuffer[(String, Long, Boolean)]()
       val docIds = docs.select(col("doc_id"))
       val deadIds = docs.filter(col("status").isin(Schemas.DocumentStatus.Dead: _*))
         .select(col("doc_id"))
@@ -1857,16 +1851,12 @@ object Main {
             checks += (("vector_index_missing", slice.count(), false))
         }
       }
-    } finally {
-      docs.unpersist(false)
-      (chunksOpt ++ embOpt ++ sigsOpt ++ jobsOpt ++ postingsOpt ++
-        vecOpt.flatMap(_._2)).foreach(_.unpersist(false))
+      val lines = checks.toSeq.map { case (name, n, viol) =>
+        s"""{"check":"$name","count":$n,"violation":$viol$tag}"""
+      }
+      val nViol = checks.collect { case (_, n, true) => n }.sum
+      (converged ++ lines, nViol)
     }
-    val lines = checks.toSeq.map { case (name, n, viol) =>
-      s"""{"check":"$name","count":$n,"violation":$viol$tag}"""
-    }
-    val nViol = checks.collect { case (_, n, true) => n }.sum
-    (converged ++ lines, nViol)
   }
 
   // ------------------------------------------------------------- fsck repair
@@ -1946,7 +1936,7 @@ object Main {
     }
 
   private def runFsckRepairInner(spark: SparkSession,
-                                 storeDir: String): Seq[String] = {
+                                 storeDir: String): Seq[String] = Pins.scope {
     def tblFile(name: String) = new java.io.File(s"$storeDir/$name.parquet")
     // writeTable's commit, not delete-then-rename: a crash at any point
     // leaves a complete snapshot, and the co-bucketed pair keeps its
@@ -1968,40 +1958,33 @@ object Main {
     out ++= sweepStaleAsides(storeDir).map(t =>
       s"""{"table":"$t","stale_aside_swept":true}""")
     val docs = spark.read.parquet(tblFile("documents").toString)
-    val liveIds = docs.filter(!col("status").isin(Schemas.DocumentStatus.Dead: _*))
-      .select(col("doc_id")).localCheckpoint(true)
-    try {
-      if (tblFile("chunks").exists()) Tables.withTableLock(tblFile("chunks").toString) {
-        val chunks = spark.read.parquet(tblFile("chunks").toString)
-        val keep = chunks.join(liveIds, Seq("doc_id"), "left_semi")
-          .localCheckpoint(true)
-        val pruned = chunks.count() - keep.count()
-        if (pruned > 0) swapRewrite("chunks", keep)
-        keep.unpersist(false)
-        out += s"""{"table":"chunks","pruned":$pruned}"""
+    val liveIds = pin(docs.filter(!col("status").isin(Schemas.DocumentStatus.Dead: _*))
+      .select(col("doc_id")))
+    if (tblFile("chunks").exists()) Tables.withTableLock(tblFile("chunks").toString) {
+      val chunks = spark.read.parquet(tblFile("chunks").toString)
+      val keep = pin(chunks.join(liveIds, Seq("doc_id"), "left_semi"))
+      val pruned = chunks.count() - keep.count()
+      if (pruned > 0) swapRewrite("chunks", keep)
+      out += s"""{"table":"chunks","pruned":$pruned}"""
+    }
+    if (tblFile("embeddings").exists() && tblFile("chunks").exists())
+      Tables.withTableLock(tblFile("embeddings").toString) {
+        val emb = spark.read.parquet(tblFile("embeddings").toString)
+        val liveChunks = spark.read.parquet(tblFile("chunks").toString)
+          .select(col("chunk_id"))
+        val keep = pin(emb.join(liveChunks, Seq("chunk_id"), "left_semi"))
+        val pruned = emb.count() - keep.count()
+        if (pruned > 0) swapRewrite("embeddings", keep)
+        out += s"""{"table":"embeddings","pruned":$pruned}"""
       }
-      if (tblFile("embeddings").exists() && tblFile("chunks").exists())
-        Tables.withTableLock(tblFile("embeddings").toString) {
-          val emb = spark.read.parquet(tblFile("embeddings").toString)
-          val liveChunks = spark.read.parquet(tblFile("chunks").toString)
-            .select(col("chunk_id"))
-          val keep = emb.join(liveChunks, Seq("chunk_id"), "left_semi")
-            .localCheckpoint(true)
-          val pruned = emb.count() - keep.count()
-          if (pruned > 0) swapRewrite("embeddings", keep)
-          keep.unpersist(false)
-          out += s"""{"table":"embeddings","pruned":$pruned}"""
-        }
-      if (tblFile("signatures").exists()) Tables.withTableLock(tblFile("signatures").toString) {
-        val sigs = spark.read.parquet(tblFile("signatures").toString)
-        val keep = sigs.join(liveIds, sigs("doc") === liveIds("doc_id"),
-                             "left_semi").localCheckpoint(true)
-        val pruned = sigs.count() - keep.count()
-        if (pruned > 0) swapRewrite("signatures", keep)
-        keep.unpersist(false)
-        out += s"""{"table":"signatures","pruned":$pruned}"""
-      }
-    } finally liveIds.unpersist(false)
+    if (tblFile("signatures").exists()) Tables.withTableLock(tblFile("signatures").toString) {
+      val sigs = spark.read.parquet(tblFile("signatures").toString)
+      val keep = pin(sigs.join(liveIds, sigs("doc") === liveIds("doc_id"),
+                               "left_semi"))
+      val pruned = sigs.count() - keep.count()
+      if (pruned > 0) swapRewrite("signatures", keep)
+      out += s"""{"table":"signatures","pruned":$pruned}"""
+    }
     out.toSeq
   }
 
@@ -2262,7 +2245,7 @@ object Main {
     * vocabulary mismatch, serving beside `--hybrid`'s vector tier.
     */
   def runSearchPrf(spark: SparkSession, storeDir: String, query: String,
-                   k: Int): Seq[String] = {
+                   k: Int): Seq[String] = Pins.scope {
     graft.search.Search.prfTopK(
         openTable(spark, storeDir, "chunks"), "chunk_id", "content", query,
         seedK = 3, expand = 2, k = k)
@@ -2317,7 +2300,7 @@ object Main {
     * lexical tiers would otherwise silently zero-hit on.
     */
   def runSearchSuggest(spark: SparkSession, storeDir: String, query: String,
-                       k: Int): Seq[String] = {
+                       k: Int): Seq[String] = Pins.scope {
     import spark.implicits._
     val terms = Search.queryTokens(query)
     require(terms.nonEmpty, "query must contain at least one word token")
@@ -2693,26 +2676,21 @@ object Main {
   def runProfile(spark: SparkSession, storeDir: String,
                  rebuild: Boolean = false,
                  probeTokens: Seq[String] = Nil,
-                 readOnly: Boolean = false): Seq[String] = {
+                 readOnly: Boolean = false): Seq[String] = Pins.scope {
     import graft.text.ProfileState
     val chunksDir = new java.io.File(s"$storeDir/chunks.parquet")
     require(chunksDir.exists(), s"no chunks table under $storeDir — ingest first")
-    // released after the report collects (rescan paths only — the
-    // serving actions below would otherwise re-scan/re-tokenize the
-    // corpus once per report family); the try spans from the pin's
-    // creation, so a failing heal write cannot leak a corpus-sized pin
-    var scanPin: Option[DataFrame] = None
-    try {
+    // the rescan paths pin the scan, freed after the report collects:
+    // the serving actions below would otherwise re-scan/re-tokenize
+    // the corpus once per report family
     val parts =
       (if (rebuild) None else ProfileState.readSynced(spark, storeDir, chunksDir))
         .getOrElse {
           // fingerprint BEFORE the scan frames are built — the pair
           // written below must describe the listing the scan read
           val fp = ProfileState.dirFingerprint(chunksDir)
-          val base = openTable(spark, storeDir, "chunks")
-            .select(col("doc_id"), col("strategy"), col("content"))
-            .localCheckpoint(true)
-          scanPin = Some(base)
+          val base = pin(openTable(spark, storeDir, "chunks")
+            .select(col("doc_id"), col("strategy"), col("content")))
           val scanned = ProfileState.fromChunks(base)
           if (readOnly) scanned
           else {
@@ -2759,7 +2737,6 @@ object Main {
           s"""{"token":"${jsonEscape(t)}","est_cnt":${est.getOrElse(t, 0L)}}""")
       }
     (perStrategy :+ zipfLine) ++ sketchLines ++ probeLines
-    } finally scanPin.foreach(graft.io.Pins.release)
   }
 
   // ------------------------------------------------------------------ delete
@@ -2876,7 +2853,7 @@ object Main {
         // this transaction's scratch pins (the id set, the chunk
         // capture) are freed before returning — repeated takedowns in
         // a long-lived session must not accumulate pinned RDDs
-        graft.io.Pins.sweepingNew(spark) {
+        Pins.scope {
           deleteTransaction(spark, storeDir, ids, now,
                             tolerateRemoved = scrubSnapshots)
         }
@@ -2925,7 +2902,7 @@ object Main {
         // contender take over and relink mid-scrub.
         Tables.withTableLock(s"$storeDir/.store", heartbeatMs = 60000L) {
         Tables.withTableLock(s"$snapRoot/.store", heartbeatMs = 60000L) {
-          graft.io.Pins.sweepingNew(spark) {
+          Pins.scope {
             deleteTransaction(spark, snapRoot, heldHere, now,
                               tolerateRemoved = true)
           }
@@ -3061,7 +3038,7 @@ object Main {
     require(docsPath.exists(), s"no documents table under $storeDir")
     // the id set as a (tiny, broadcast) join side — an isin literal of
     // a 10,000-id GDPR list would be a 10,000-node expression tree
-    val idsDf = ids.toDF("doc_id").localCheckpoint(true)
+    val idsDf = pin(ids.toDF("doc_id"))
     val stored = spark.read.parquet(docsPath.toString)
       .join(idsDf, Seq("doc_id"), "left_semi")
       .select($"doc_id", $"status")
@@ -3138,7 +3115,7 @@ object Main {
       return (ids.map(_ -> ((0L, 0L, 0L))).toMap, holding, unreadable)
     val delDf =
       if (liveIds == ids) idsDf
-      else liveIds.toDF("doc_id").localCheckpoint(true)
+      else pin(liveIds.toDF("doc_id"))
 
     val chunksDirF = new java.io.File(s"$storeDir/chunks.parquet")
     // profile-state sync gate + the docs' stored chunks, captured
@@ -3149,8 +3126,8 @@ object Main {
       if (chunksDirF.exists())
         Some(openTable(spark, storeDir, "chunks")
           .join(delDf, Seq("doc_id"), "left_semi")
-          .select($"doc_id", $"chunk_id", $"content", $"strategy")
-          .localCheckpoint(true))
+          .select($"doc_id", $"chunk_id", $"content", $"strategy"))
+          .map(pin(_))
       else None
     val chunksByDoc: Map[String, Long] = docChunks
       .map(_.groupBy($"doc_id").agg(count(lit(1)).as("n"))
@@ -3332,21 +3309,19 @@ object Main {
     * list is pinned once and feeds both reads.
     */
   def runDupReport(spark: SparkSession, inDir: String,
-                   topK: Int = 5): Seq[String] = {
+                   topK: Int = 5): Seq[String] = Pins.scope {
     import graft.operators.Graph
     // pinned: conversion (real PDF/Office/image decode) is the
     // expensive stage, and both the count and the signature build
     // read it
-    val docs = Ingest.convertDocuments(
+    val docs = pin(Ingest.convertDocuments(
         Ingest.toDocuments(Ingest.readBinaryDir(spark, inDir)))
-      .filter(col("text").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("text").isNotNull))
     val nDocs = docs.count()
-    val edges = graft.dedup.Dedup
+    val edges = pin(graft.dedup.Dedup
       .candidatesFromSigs(graft.dedup.Dedup.minhashSignatures(
-        docs, "doc_id", "text", nBands = 4))
-      .localCheckpoint(true)
-    val tri = Graph.triangleCounts(edges, "a_id", "b_id").localCheckpoint(true)
+        docs, "doc_id", "text", nBands = 4)))
+    val tri = pin(Graph.triangleCounts(edges, "a_id", "b_id"))
     // coalesce inside the agg: a clean batch has ZERO edges, so the
     // sums aggregate no rows and return null — the common case must
     // print zeros, not NPE

@@ -39,7 +39,7 @@ object Session extends org.apache.spark.internal.Logging {
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   /** Two WARNs that fire by contract, quieted to ERROR:
-    *  - dropping a dead localCheckpoint pin (`Pins.release`/`sweepAll`)
+    *  - dropping a dead localCheckpoint pin (`Pins.scope`'s free)
     *    logs "locally checkpointed ... cannot be recomputed" per pin;
     *  - WindowExec's single-partition WARN: global windows here only
     *    ever run over aggregate-bounded frames (frequency histograms,

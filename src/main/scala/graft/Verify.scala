@@ -18,14 +18,15 @@ object Verify {
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // the scope frees the pins the query made (queries are isolated;
+      // nothing is intentionally cached across them)
+      try graft.io.Pins.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release any localCheckpoint pins the query created (queries are
-      // isolated; nothing is intentionally cached across them)
-      finally graft.io.Pins.sweepAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

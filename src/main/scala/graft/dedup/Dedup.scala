@@ -604,17 +604,16 @@ object Dedup {
   def shingleShareEdges(df: DataFrame, idCol: String, textCol: String,
                         shingleK: Int = 5, dfCap: Int = 20,
                         minShared: Int = 3): DataFrame = {
-    // the (doc, hash) table materializes ONCE (localCheckpoint, the
+    // the (doc, hash) table materializes ONCE (a pin, the
     // q97/q110 pattern): the df aggregate and BOTH self-join sides read
     // it — without the pin the interpreted tokenize+shingle+md5 pass
     // runs four times. Measured and rejected (r18): spreading the scan
     // first — the pin then holds 32 partitions and every one of its
     // several consumers pays the wider task fan-out, a consistent
     // +0.5 s on q130/q168/q171 at sf0.1.
-    val hs = shingleHashes(df.select(col(idCol), col(textCol)),
-                           idCol, textCol, shingleK)
-      .select(col(idCol), explode(array_distinct(col("hs"))).as("h"))
-      .localCheckpoint()
+    val hs = graft.io.Pins.pin(
+      shingleHashes(df.select(col(idCol), col(textCol)), idCol, textCol, shingleK)
+        .select(col(idCol), explode(array_distinct(col("hs"))).as("h")))
     val ok = hs.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= dfCap)
       .select(col("h"))
@@ -866,80 +865,31 @@ object Dedup {
     * Materialization: each round's labels are pinned as a FLAT
     * `LogicalRDD` (the label table appears three times in the next
     * round's plan — msgs, stepped, parents — so an unpinned plan would
-    * triple in size per round), the previous round's storage is
-    * unpersisted as soon as the next is materialized (executor storage
-    * stays O(1) in rounds, not O(iters)), and when `checkpointDir` is
-    * given each round is also RELIABLY checkpointed — the
-    * fault-tolerant iterate-and-checkpoint loop a real cluster needs
-    * (memory-only pins die with an executor). The returned labels
-    * remain pinned; callers own that final table's lifecycle.
+    * triple in size per round). Every pin here, the returned labels'
+    * included, belongs to the caller's [[graft.io.Pins.scope]]; when
+    * the context has a checkpoint dir the pins take the RELIABLE form
+    * — the fault-tolerant iterate-and-checkpoint loop a real cluster
+    * needs (memory-only pins die with an executor), opted into by
+    * `setCheckpointDir` as GraphFrames does.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIters: Int = 30,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    // the checkpoint dir is SparkContext-global: set it only when unset
-    // (never silently repoint other users' checkpoints)
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // reliable checkpointing engages when EITHER the caller passed a
-    // dir or the context already has one (a harness/cluster that ran
-    // setCheckpointDir opts every CC run into fault-tolerant rounds —
-    // the GraphFrames convention; memory-only pins die with an
-    // executor)
-    val cpEnabled = spark.sparkContext.getCheckpointDir.isDefined
-    // free a round's storage AND its reliable-checkpoint files —
-    // without the file cleanup, iterated runs accumulate one
-    // checkpoint per round on disk for the app's lifetime
-    def free(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-      rdd.unpersist(blocking = false)
-      if (cpEnabled) rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-    }
-    // Pin = flat plan + explicit free handle, via Dataset.checkpoint/
-    // localCheckpoint so the pinned rows stay in Spark's INTERNAL row
-    // format end to end. The previous `df.rdd` + `createDataFrame`
-    // roundtrip paid an InternalRow→Row deserializer on write and an
-    // interpreted Row→InternalRow converter on every downstream read
-    // of the pin (2-3 reads per round), plus a second driver-side
-    // planning pass — measured ~0.45 s/round vs ~0.13 s for the round's
-    // actual job at sf0.1 (r17). The explicit free handle is the
-    // LogicalRDD's internal RDD (the same handle Pins.release targets).
-    // Only the loop inputs are materialized eagerly; each round's pin
-    // is computed by that round's single convergence-count action (a
-    // full count over the filtered pin scans every partition, so the
-    // cache is complete before the previous round is unpersisted) —
-    // one job per round, not two.
-    def pin(df: DataFrame, eager: Boolean)
-        : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-      // eager = false always: materialization belongs to the caller's
-      // next action. localCheckpoint persists MEMORY_AND_DISK itself;
-      // the reliable path persists here (checkpoint() alone would
-      // re-read files on every downstream scan of the round).
-      // capStats: a round joins the previous round's pin four times
-      // and the new pin inherits the round's size estimate, so
-      // uncapped the estimate's bit length about triples per round
-      // (q133 at sf0.001 runs 15 rounds; building it took 206 s
-      // uncapped, 22 s capped)
-      val pinned = graft.io.Pins.capStats(
-        if (cpEnabled) df.checkpoint(eager = false)
-        else df.localCheckpoint(eager = false))
-      val rdd = pinned.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.getOrElse(throw new IllegalStateException(
-        "checkpointed plan did not produce a LogicalRDD"))
-      if (cpEnabled)
-        rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (eager) rdd.count()
-      (pinned, rdd)
-    }
+                          maxIters: Int = 30): DataFrame = {
+    // Pins keep the rows in Spark's INTERNAL row format end to end: a
+    // `df.rdd` + `createDataFrame` roundtrip paid an InternalRow→Row
+    // deserializer on write and an interpreted Row→InternalRow
+    // converter on every downstream read of the pin (2-3 reads per
+    // round), plus a second driver-side planning pass — measured
+    // ~0.45 s/round vs ~0.13 s for the round's actual job at sf0.1
+    // (r17). Only the loop inputs are materialized eagerly; each
+    // round's pin is computed by that round's single convergence-count
+    // action — one job per round, not two.
+    def pin(df: DataFrame, eager: Boolean): DataFrame =
+      graft.io.Pins.pin(df, eager, reliable = true)
     // pin the DIRECTED edges first: a union of two branches over the
     // raw `edges` would evaluate the (md5-heavy) upstream candidate
     // pipeline twice in the same job. sym stays a cheap view over the
     // pin — the swap projection re-evaluates per round, the LSH never.
-    val (e0, symRdd) = pin(
+    val e0 = pin(
       edges.select(col(aCol).as("u"), col(bCol).as("v")), eager = true)
     val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
     // seed labels with the one-hop neighborhood min — min(id, min(N(id)))
@@ -947,7 +897,7 @@ object Dedup {
     // replaces (a groupBy on the same key), but tiny-diameter dup
     // clusters (pairs/stars — the common near-dup shape) start AT the
     // fixed point and converge in one verification round instead of 2-3.
-    var (labels, labelsRdd) = pin(
+    var labels = pin(
       sym.groupBy(col("u"))
         .agg(least(col("u"), min(col("v"))).as("comp"))
         .select(col("u").as("id"), col("comp")), eager = true)
@@ -983,22 +933,16 @@ object Dedup {
                   least(cur("comp"),
                         coalesce(col(s"pcomp$h"), cur("comp"))).as("comp"))
       }
-      val (next, nextRdd) = pin(hopped, eager = false)
+      val next = pin(hopped, eager = false)
       // full count (no limit-1 short circuit): doubles as the round's
-      // materializing action, so `next` is fully cached before the
-      // previous round's storage is dropped
+      // materializing action
       converged = next.filter(col("comp") =!= col("old")).count() == 0L
-      free(labelsRdd) // previous round is dead once next is pinned
-      labelsRdd = nextRdd
       labels = next.select(col("id"), col("comp"))
       iter += 1
     }
-    free(symRdd)
-    if (!converged) {
-      free(labelsRdd) // failure path must not leak the last round's pin
+    if (!converged)
       throw new IllegalArgumentException(
         s"connectedComponents did not converge in $maxIters rounds")
-    }
     labels
   }
 
@@ -1008,9 +952,8 @@ object Dedup {
     * `comp` — the canonical cluster label (min doc id in the cluster).
     */
   def dupClusters(docs: DataFrame, idCol: String,
-                  edges: DataFrame, aCol: String, bCol: String,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    val cc = connectedComponents(edges, aCol, bCol, checkpointDir = checkpointDir)
+                  edges: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val cc = connectedComponents(edges, aCol, bCol)
       .withColumnRenamed("id", idCol)
     docs.select(col(idCol))
       .join(cc, Seq(idCol), "left")
@@ -1025,10 +968,9 @@ object Dedup {
     * `comp` (the ranking window) past the cluster step.
     */
   def keepOne(docs: DataFrame, idCol: String, scoreCol: Column,
-              edges: DataFrame, aCol: String, bCol: String,
-              checkpointDir: Option[String] = None): DataFrame = {
+              edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val labeled = docs.join(
-      dupClusters(docs, idCol, edges, aCol, bCol, checkpointDir), Seq(idCol))
+      dupClusters(docs, idCol, edges, aCol, bCol), Seq(idCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("comp")).orderBy(scoreCol.desc, col(idCol).asc)
     labeled.withColumn("keep", row_number().over(w) === 1)
@@ -1043,19 +985,16 @@ object Dedup {
     * from-scratch [[dupClusters]] over [[minhashCandidates]] of the
     * same corpus (the signature pipeline is deterministic).
     */
-  def dupClustersFromSigs(docs: DataFrame, idCol: String, sigs: DataFrame,
-                          checkpointDir: Option[String] = None): DataFrame =
-    dupClusters(docs, idCol, candidatesFromSigs(sigs), "a_id", "b_id",
-                checkpointDir)
+  def dupClustersFromSigs(docs: DataFrame, idCol: String,
+                          sigs: DataFrame): DataFrame =
+    dupClusters(docs, idCol, candidatesFromSigs(sigs), "a_id", "b_id")
 
   /** [[keepOne]] over a STORED signature table — canonical-document
     * selection without re-shingling (see [[dupClustersFromSigs]]).
     */
   def keepOneFromSigs(docs: DataFrame, idCol: String, scoreCol: Column,
-                      sigs: DataFrame,
-                      checkpointDir: Option[String] = None): DataFrame =
-    keepOne(docs, idCol, scoreCol, candidatesFromSigs(sigs), "a_id", "b_id",
-            checkpointDir)
+                      sigs: DataFrame): DataFrame =
+    keepOne(docs, idCol, scoreCol, candidatesFromSigs(sigs), "a_id", "b_id")
 
   /** Embedding near-duplicate pairs: cosine >= `cosThreshold` within a
     * blocking key, computed in EXACT integer arithmetic on vectors
@@ -1199,8 +1138,7 @@ object Dedup {
     */
   def semDedup(assigned: DataFrame, idCol: String, vecCol: String,
                cellCol: String = "cell", cdotCol: String = "cdot",
-               thresholdNum: Long = 81, thresholdDen: Long = 100,
-               checkpointDir: Option[String] = None): DataFrame = {
+               thresholdNum: Long = 81, thresholdDen: Long = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the assigned frame (quantizer E-step: per-vector argmin over k
     // centroids) is read FOUR times below — both sides of the
@@ -1208,13 +1146,12 @@ object Dedup {
     // left-join's id side. Pin it once (r17): at production scale this
     // is "write the assignment table, then pair it" — the quantizer
     // never re-scores the corpus per consumer.
-    val pinned = assigned.localCheckpoint()
+    val pinned = graft.io.Pins.pin(assigned)
     val edges = embeddingNearDupPairs(pinned, idCol, vecCol, cellCol,
                                       thresholdNum, thresholdDen)
     val labeled = pinned
       .select(col(idCol), col(cellCol), col(cdotCol))
-      .join(dupClusters(pinned, idCol, edges, "a_id", "b_id",
-                        checkpointDir), Seq(idCol))
+      .join(dupClusters(pinned, idCol, edges, "a_id", "b_id"), Seq(idCol))
     val w = Window.partitionBy(col("comp"))
       .orderBy(col(cdotCol).asc, col(idCol).asc)
     labeled.withColumn("keep", row_number().over(w) === 1)

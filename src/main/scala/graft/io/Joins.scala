@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions.broadcast
   * (solaius/data_pipeline2 keeps whole documents in process memory);
   * on a cluster the decision must be made from the RUNTIME size.
   *
-  * [[boundedBroadcast]] PINS the dictionary (`localCheckpoint` —
-  * dictionary-sized by contract, and the count plus the join would
-  * otherwise each recompute the aggregate), counts the pinned rows,
-  * and
+  * [[boundedBroadcast]] PINS the dictionary (dictionary-sized by
+  * contract, and the count plus the join would otherwise each
+  * recompute the aggregate), counts the pinned rows, and
   *   - under the bound: broadcasts — the skew-proof plan, since
   *     dictionary keys (stopwords, frequent tokens) are exactly the
   *     hot keys a shuffle would pile onto one partition;
@@ -27,8 +26,8 @@ import org.apache.spark.sql.functions.broadcast
   *
   * Construction is deliberately EAGER (a Spark job runs when the plan
   * is BUILT — the runtime size decision cannot be made declaratively);
-  * the pin lands in the returned plan, so the caller's existing
-  * [[Pins.release]]-after-terminal-action contract frees it.
+  * the pin lands in the returned plan and belongs to the caller's
+  * [[Pins.scope]].
   *
   * Default bound: 4M rows ≈ low-hundreds-of-MB broadcast for short
   * string keys + a long — inside executor memory at the target
@@ -40,7 +39,7 @@ object Joins {
 
   def boundedBroadcast(dict: DataFrame,
                        maxRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val pinned = dict.localCheckpoint(true)
+    val pinned = Pins.pin(dict)
     if (pinned.count() <= maxRows) broadcast(pinned) else pinned
   }
 }

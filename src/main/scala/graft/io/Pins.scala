@@ -1,63 +1,99 @@
 package graft.io
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Caller-owned lifecycle for `localCheckpoint` pins.
+/** The one place the engine pins a frame and frees a pin.
   *
-  * Several operators ([[graft.text.TextStats.dedupParagraphs]],
-  * [[graft.text.TextStats.oovSignals]],
-  * [[graft.text.TextStats.tokenizeToIds]],
-  * [[graft.text.TextStats.tfidfTopTerms]],
-  * [[graft.text.Curation.temperatureSample]]) pin a shared intermediate
-  * with `localCheckpoint(true)` so two aggregation branches read ONE
-  * scan instead of two. The pin is MEMORY_AND_DISK storage owned by the
-  * session; without an explicit release every invocation leaks it for
-  * the session's lifetime. Contract (same shape as
-  * `Dedup.connectedComponents`'s per-round unpersist): run your
-  * terminal action, then release.
+  * A pin materializes an intermediate once so that several readers
+  * share one scan (a store transaction's id sets and captures, an
+  * operator's tokenized table, a loop's round state). Its blocks ARE
+  * the data: a local checkpoint cannot be recomputed once dropped, and
+  * `Dataset.unpersist` does not drop it. Two calls cover every pin:
+  *
+  *  - [[pin]] checkpoints the frame, caps its size estimate
+  *    ([[capStats]]) and registers the pin in the innermost open
+  *    [[scope]] of the calling thread.
+  *  - [[scope]] runs a body and then frees exactly the pins registered
+  *    inside it, on return and on throw. Scopes nest; each thread has
+  *    its own stack of them, so a scope never frees another thread's
+  *    pins. A pin made while no scope is open lives for the session.
+  *
+  * An operator whose returned frame reads its own pin opens no scope:
+  * the pin belongs to the caller's scope and is freed when that scope
+  * ends, after the caller's terminal action. A loop's round pins are
+  * freed the same way, all together when the enclosing scope ends.
+  *
+  * The reliable form (`reliable = true` while the context has a
+  * checkpoint dir) persists MEMORY_AND_DISK, checkpoints to that dir,
+  * and deletes the checkpoint files when freed. Only
+  * `Dedup.connectedComponents` asks for it so far: a reliable
+  * checkpoint writes every pin to the checkpoint dir, a cost not yet
+  * measured for the other pins.
   */
 object Pins {
 
-  /** Unpersist every localCheckpoint pin embedded in `df`'s plan — the
-    * targeted release for a single operator result. Only call AFTER the
-    * terminal action: the pinned blocks ARE the data (a local
-    * checkpoint cannot be recomputed once dropped).
-    * `foreachWithSubqueries` also descends into subquery-expression
-    * plans (a plain foreach would silently leave a pin reachable only
-    * through a ScalarSubquery/InSubquery pinned forever).
-    */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreachWithSubqueries {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  private final class Pin(val rdd: RDD[_], val reliable: Boolean)
 
-  /** Run `body`, then unpersist every RDD pinned DURING it — the
-    * transaction-scratch sweep the ingest and delete paths share: a
-    * long-lived session running repeated store transactions must not
-    * accumulate their localCheckpoint pins (each transaction's scratch
-    * — id sets, pre-prune captures — is dead once it returns).
-    */
-  def sweepingNew[A](spark: SparkSession)(body: => A): A = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try body
-    finally spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => before.contains(id) }
-      .values.foreach(_.unpersist(blocking = false))
+  private val scopes = new ThreadLocal[List[ArrayBuffer[Pin]]] {
+    override def initialValue(): List[ArrayBuffer[Pin]] = Nil
   }
 
-  /** Unpersist everything pinned in the session — the between-queries
-    * sweep for harnesses (Verify/Bench) whose queries are isolated and
-    * fully consumed before the next starts. Pass `blocking = true` from
-    * timing harnesses: an async teardown overlaps (and noises) the next
-    * timed sample.
+  /** `df` checkpointed and registered in the innermost open scope.
+    * `eager = false` leaves materialization to the caller's next
+    * action (a loop whose convergence count doubles as the round's
+    * materializing job).
+    */
+  def pin(df: DataFrame, eager: Boolean = true,
+          reliable: Boolean = false): DataFrame = {
+    val useReliable = reliable && df.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val pinned = capStats(
+      if (useReliable) df.checkpoint(eager = false) else df.localCheckpoint(eager))
+    val rdd = pinned.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    if (useReliable) {
+      // checkpoint() alone would re-read the files on every scan
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      if (eager) rdd.count()
+    }
+    scopes.get.headOption.foreach(_ += new Pin(rdd, useReliable))
+    pinned
+  }
+
+  /** Run `body`, then free every pin registered inside it (nested
+    * scopes free their own first). `blocking = true` waits for the
+    * blocks to be dropped: a timing harness passes it so an async
+    * teardown does not overlap the next timed sample.
+    */
+  def scope[A](body: => A, blocking: Boolean = false): A = {
+    val mine = ArrayBuffer.empty[Pin]
+    val outer = scopes.get
+    scopes.set(mine :: outer)
+    try body
+    finally {
+      scopes.set(outer)
+      mine.foreach { p =>
+        p.rdd.unpersist(blocking)
+        if (p.reliable) p.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(p.rdd.sparkContext.hadoopConfiguration).delete(path, true)
+        }
+      }
+    }
+  }
+
+  /** Unpersist everything persisted in the session, whatever made it.
+    * The engine frees through [[scope]]; this stays for outside
+    * harnesses that sweep between samples.
     */
   def sweepAll(spark: SparkSession, blocking: Boolean = false): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking))
 
-  /** `pinned` with each pin's size and row-count estimates capped at
+  /** `pinned` with its size and row-count estimates capped at
     * `Long.MaxValue`. A checkpoint keeps the estimate of the plan it
     * replaced, and a join's estimate is the product of its children's,
     * so a loop that pins each round and joins the pin several times
@@ -67,22 +103,18 @@ object Pins {
     * checkpoint. No plan choice changes: an estimate past
     * `Long.MaxValue` is past every broadcast threshold either way.
     */
-  def capStats(pinned: DataFrame): DataFrame = {
+  private def capStats(pinned: DataFrame): DataFrame = {
     val spark = pinned.sparkSession.asInstanceOf[classic.SparkSession]
     val cap = BigInt(Long.MaxValue)
     // built directly, not through `transform`: the copy differs from
     // the pin only in its second parameter list, which case-class
     // equality ignores, so `transform` would keep the original node
-    val capped = pinned.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        val s = lr.computeStats()
-        lr.copy()(spark,
-                  Some(s.copy(sizeInBytes = s.sizeInBytes.min(cap),
-                              rowCount = s.rowCount.map(_.min(cap)))),
-                  Some(lr.constraints))
-      case p => throw new IllegalArgumentException(
-        s"capStats expects a checkpointed frame, got ${p.nodeName}")
-    }
+    val lr = pinned.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val s = lr.computeStats()
+    val capped = lr.copy()(spark,
+                           Some(s.copy(sizeInBytes = s.sizeInBytes.min(cap),
+                                       rowCount = s.rowCount.map(_.min(cap)))),
+                           Some(lr.constraints))
     new classic.Dataset[Row](spark, capped, Encoders.row(pinned.schema))
   }
 }

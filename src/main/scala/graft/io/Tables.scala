@@ -230,10 +230,12 @@ object Tables {
     val actualBuckets = java.nio.file.Files.readString(marker.toPath).trim.toInt
     val schema = spark.read.parquet(path).schema
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    // the absolute URI: a relative LOCATION resolves against the
+    // warehouse dir, not the working directory the path was given in
     spark.sql(
       s"""CREATE TABLE `$table` (${schema.toDDL}) USING PARQUET
           CLUSTERED BY (`$bucketCol`) SORTED BY (`$bucketCol`) INTO $actualBuckets BUCKETS
-          LOCATION '$path'""")
+          LOCATION '${new java.io.File(path).toURI}'""")
     spark.table(table)
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
+
 /** Graph analytics over edge lists — the Pregel-shaped iterative ops
   * (join + aggregate per round), in the exact fixed-point integer
   * algebra the rest of the library uses so every round is
@@ -37,7 +39,7 @@ object Graph {
                iters: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
                scale: Long = 1000000L): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampNum < dampDen)
-    // the adjacency materializes ONCE (localCheckpoint): the degree
+    // the adjacency materializes ONCE (a pin): the degree
     // aggregate and EVERY power-iteration join read it — without the
     // pin each round re-runs the whole upstream edge construction. At
     // production scale this is "write the adjacency table, then
@@ -45,12 +47,10 @@ object Graph {
     // edges pin first (the connectedComponents pattern): a union of
     // two branches over raw `edges` would evaluate the caller's whole
     // edge pipeline twice in one job.
-    val e0 = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    val sym = e0
+    val e0 = pin(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val sym = pin(e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val withDeg = sym.join(deg, Seq("src"))
     val base = scale * (dampDen - dampNum) / dampDen
@@ -96,18 +96,17 @@ object Graph {
     * — a one-edge node closes nothing by definition).
     */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val und = edges.select(
+    val und = pin(edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     // orient u—v from its lower (deg, id) endpoint; carry the head's
     // (deg, id) so the wedge join can order its two heads without
     // another degree lookup
-    val orient = und
+    val orient = pin(und
       .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
       .select(
@@ -117,8 +116,7 @@ object Graph {
         when(col("du") < col("dv") ||
              (col("du") === col("dv") && col("u") < col("v")), col("v"))
           .otherwise(col("u")).as("dst"),
-        greatest(col("du"), col("dv")).as("ddeg"))
-      .localCheckpoint()
+        greatest(col("du"), col("dv")).as("ddeg")))
     val o1 = orient.select(col("src"), col("dst").as("y"),
                            col("ddeg").as("dy"))
     val o2 = orient.select(col("src"), col("dst").as("z"),
@@ -171,16 +169,13 @@ object Graph {
     require(iters >= 1)
     // directed edges pin first — see pageRank: the two union branches
     // must not evaluate the caller's edge pipeline twice
-    val e0 = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .localCheckpoint()
-    val sym = e0
+    val e0 = pin(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val sym = pin(e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    var lab = seeds
+      .distinct())
+    var lab = pin(seeds
       .select(col(idCol).as("node"), col(labelCol).as("plabel"),
-              lit(0L).as("round"))
-      .localCheckpoint()
+              lit(0L).as("round")))
     for (r <- 1 to iters) {
       val votes = sym
         .join(lab.select(col("node").as("src"), col("plabel")), Seq("src"))
@@ -194,9 +189,10 @@ object Graph {
         .select(col("dst").as("node"), col("plabel"),
                 lit(r.toLong).as("round"))
         .join(lab.select(col("node")), Seq("node"), "left_anti")
-      // capStats: a round joins the last pin twice, and the new pin
-      // inherits that product estimate (past Long.MaxValue by round 8)
-      lab = graft.io.Pins.capStats(lab.unionByName(newly).localCheckpoint())
+      // a round joins the last pin twice, and the new pin inherits
+      // that product estimate (past Long.MaxValue by round 8 without
+      // the cap every pin takes)
+      lab = pin(lab.unionByName(newly))
     }
     lab
   }

@@ -8,6 +8,7 @@ import graft.chunk.Chunkers
 import graft.chunk.Chunkers.{ChunkerConfig, Strategy}
 import graft.dedup.Dedup
 import graft.embed.Embedding
+import graft.io.Pins.pin
 import graft.io.Tables
 import graft.multimodal.Multimodal
 import graft.search.{Ann, Search}
@@ -317,18 +318,30 @@ object Pipeline {
   private def q36VectorsPath(sfDir: String): String =
     s"$q36Root/${new java.io.File(sfDir).getName}/vectors.parquet"
 
+  /** Root of the stores below that a JVM builds at most once: one
+    * directory per JVM under [[q36Root]], removed when the JVM exits.
+    * JVMs of one checkout run at once (the forked test suites), and a
+    * shared directory let one rebuild a store while another was
+    * reading it (FILE_NOT_EXIST mid-scan).
+    */
+  private lazy val jvmRoot: String = {
+    val root = s"$q36Root/jvm-${ProcessHandle.current().pid()}"
+    sys.addShutdownHook(graft.io.Tables.rmTree(new java.io.File(root)))
+    root
+  }
+
   /** q133/q134's persisted MinHash signature table — the stored LSH
     * index the clustering family probes instead of re-shingling the
-    * corpus (same checkout-hash + sf-basename keying as q36's
-    * intermediate). Built at most ONCE PER JVM per sf dir (the
-    * in-memory marker, not on-disk presence, gates the rebuild — a
+    * corpus (keyed by [[jvmRoot]] and the sf-dir basename). Built at
+    * most ONCE PER JVM per sf dir (the in-memory marker, not on-disk
+    * presence, gates the rebuild — a
     * leftover table from an earlier JVM over regenerated testdata must
     * never serve stale signatures), so within a bench run the first
     * sample pays the build and the median times the probe-from-stored
     * path — the posture a production clustering run has.
     */
   private def sigStorePath(sfDir: String): String =
-    s"$q36Root/${new java.io.File(sfDir).getName}/minhash_sigs.parquet"
+    s"$jvmRoot/${new java.io.File(sfDir).getName}/minhash_sigs.parquet"
   private val builtSigStores =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def storedSigs(s: SparkSession, sfDir: String): DataFrame = {
@@ -351,7 +364,7 @@ object Pipeline {
     * production lexical tier has (Lucene's inverted index + norms).
     */
   private def postingsStorePath(sfDir: String): String =
-    s"$q36Root/${new java.io.File(sfDir).getName}/bm25_postings.idx"
+    s"$jvmRoot/${new java.io.File(sfDir).getName}/bm25_postings.idx"
   private val builtPostingsStores =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def storedPostingsPath(s: SparkSession, sfDir: String): String = {
@@ -377,7 +390,7 @@ object Pipeline {
     * medians the retrain cost so they time the stored probe.
     */
   private def trainedIdxPath(sfDir: String): String =
-    s"$q36Root/${new java.io.File(sfDir).getName}/trained_ivfpq.idx"
+    s"$jvmRoot/${new java.io.File(sfDir).getName}/trained_ivfpq.idx"
   private val builtTrainedIdx =
     new java.util.concurrent.ConcurrentHashMap[
       String, (Seq[(Long, Seq[Long])], Seq[(Long, Seq[Long])])]()
@@ -410,7 +423,7 @@ object Pipeline {
     * scoring pass has (train once, score per batch).
     */
   private def boostModelPath(sfDir: String): String =
-    s"$q36Root/${new java.io.File(sfDir).getName}/boost_model.parquet"
+    s"$jvmRoot/${new java.io.File(sfDir).getName}/boost_model.parquet"
   private val builtBoostModels =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def storedBoostModel(s: SparkSession, sfDir: String): DataFrame = {
@@ -418,9 +431,10 @@ object Pipeline {
     builtBoostModels.synchronized {
       if (!builtBoostModels.contains(path)) {
         // tmp + checked-rename commit (Tables.commitArtifact), not a
-        // bare Overwrite to the final path: q36Root persists across
-        // JVMs, and a crash mid-Overwrite would leave a half-written
-        // model a LATER JVM's exists()-style gate could silently read
+        // bare Overwrite to the final path: a killed JVM's directory
+        // outlives it, and a crash mid-Overwrite would leave a
+        // half-written model a LATER JVM's exists()-style gate could
+        // silently read
         graft.io.Tables.commitArtifact(path) { tmp =>
           graft.learn.Learn.boostTrainModel(
               boostEventFeatures(s, sfDir),
@@ -454,7 +468,7 @@ object Pipeline {
     * indistinguishable from a full recompute.
     */
   private def profileStateRoot(sfDir: String): String =
-    s"$q36Root/${new java.io.File(sfDir).getName}"
+    s"$jvmRoot/${new java.io.File(sfDir).getName}"
   private val builtProfileStates =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def storedProfileState(s: SparkSession, sfDir: String)
@@ -506,9 +520,9 @@ object Pipeline {
           }
         }
         // commit by OVERWRITE-rewrite of the tiny final state (≤256
-        // register rows/group), not renameTo: a second JVM over the
-        // same persistent q36Root already has the final path on disk,
-        // and a POSIX rename onto a non-empty dir silently fails —
+        // register rows/group), not renameTo: a killed JVM whose pid
+        // is reused can leave the final path on disk, and a POSIX
+        // rename onto a non-empty dir silently fails —
         // the repo convention is checked renames or overwrite writes
         (0 to 2).foreach { step =>
           Seq(sketchPath, histPath, cmsPath, vocabPath).foreach { base =>
@@ -1335,11 +1349,10 @@ object Pipeline {
       // the pairs consumer wins (tokenize+32-md5 per doc parallelizes
       // ahead of the pin), while the signatures-only q25 measured
       // slower with it (too little work to win back the exchange)
-      val sig = Dedup.simhashSignatures(
+      val sig = pin(Dedup.simhashSignatures(
           graft.io.Tables.spread(t(s, dir, "documents"), "doc_id"),
           "doc_id", "text", keepCols = Seq("source"), bits = 32)
-        .withColumnRenamed("simhash", "sh")
-        .localCheckpoint()
+        .withColumnRenamed("simhash", "sh"))
       Dedup.simhashPairs(sig, "doc_id", "sh", "source", bits = 32, maxHamming = 3)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -2004,8 +2017,7 @@ object Pipeline {
       val e = t(s, dir, "embeddings")
       // pinned: the corpus (bkt < 90) and benchmark (bkt >= 90) sides
       // both read the quantizer E-step — one assignment pass, not two
-      val assigned = Ann.ivfAssignInt(e, "embedding", labelCentroids(e))
-        .localCheckpoint()
+      val assigned = pin(Ann.ivfAssignInt(e, "embedding", labelCentroids(e)))
       val bkt = Dedup.hashBucket(col("vec_id"), 100)
       Dedup.embeddingDecontaminate(
           assigned.filter(bkt < 90), assigned.filter(bkt >= 90),
@@ -3227,9 +3239,8 @@ object Pipeline {
     // shingle pass). Gates as cross-multiplied integer rationals:
     // J ≥ t/100 ⇔ 100·inter ≥ t·(na+nb−inter).
     "q179_dedup_threshold_sweep" -> ((s, dir) => {
-      val pc = Dedup.ngramPairCounts(t(s, dir, "documents"), "doc_id",
-                                     "text", "lang", dfCap = 20)
-        .localCheckpoint(true)
+      val pc = pin(Dedup.ngramPairCounts(t(s, dir, "documents"), "doc_id",
+                                     "text", "lang", dfCap = 20))
       val ths = Seq(50L, 60L, 70L, 80L, 90L)
       val gated = pc.select(col("a_id"), col("b_id"), col("inter"),
                             col("na"), col("nb"),

@@ -3,6 +3,8 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
+
 /** Approximate nearest-neighbor search over an embedding column —
   * the scale path beyond the reference's exact brute-force kNN
   * (solaius/data_pipeline2 `services/vector_storage.py:69-100`, which
@@ -480,22 +482,20 @@ object Ann {
     df.withColumn("cell", minL2Cell(col(ivCol), centroids))
 
   /** Loan the `(__id, __iv)` integer-grid projection the trainers (and
-    * any E-step consumer) read: pin it, run `body`, release the pin.
-    * A query that trains a coarse quantizer AND PQ codebooks, or
-    * trains then assigns, runs every consumer inside ONE loan, so the
-    * corpus is quantized a single time. Whatever `body` returns must
-    * not read the pin lazily — it is gone once the loan ends.
+    * any E-step consumer) read: pin it and run `body` in one
+    * [[graft.io.Pins.scope]]. A query that trains a coarse quantizer
+    * AND PQ codebooks, or trains then assigns, runs every consumer
+    * inside ONE loan, so the corpus is quantized a single time.
+    * Whatever `body` returns must not read the pin, or any pin `body`
+    * makes, lazily — they are gone once the loan ends.
     */
   def withIntVec[A](embeddings: DataFrame, idCol: String, vecCol: String)
-                   (body: DataFrame => A): A = {
-    val iv = embeddings
-      .select(col(idCol).as("__id"), intVec(col(vecCol)).as("__iv"))
-      // read by the seed scan + every round; released via Pins —
-      // Dataset.unpersist does NOT drop a localCheckpoint pin
-      .localCheckpoint(true)
-    try body(iv)
-    finally graft.io.Pins.release(iv)
-  }
+                   (body: DataFrame => A): A =
+    graft.io.Pins.scope {
+      // read by the seed scan + every round
+      body(pin(embeddings
+        .select(col(idCol).as("__id"), intVec(col(vecCol)).as("__iv"))))
+    }
 
   /** EXACT-INTEGER LLOYD'S K-MEANS over a [[withIntVec]] frame — the
     * deterministic, oracle-exact IVF trainer: every step re-derives
@@ -660,13 +660,12 @@ object Ann {
     val seedVecs = iv.orderBy(col("__id")).limit(k)
       .collect().toSeq.map(_.getSeq[Long](1).toSeq)
     require(seedVecs.size == k, s"need at least k=$k vectors, got ${seedVecs.size}")
-    val sliced = iv
-      .select(col("__id"), explode(expr(s"sequence(0, ${m - 1})")).as("sub"),
-              col("__iv"))
-      .select(col("__id"), col("sub"),
-              slice(col("__iv"), col("sub") * subDim + 1, lit(subDim)).as("__s"))
-      .localCheckpoint(true)
-    try {
+    graft.io.Pins.scope {
+      val sliced = pin(iv
+        .select(col("__id"), explode(expr(s"sequence(0, ${m - 1})")).as("sub"),
+                col("__iv"))
+        .select(col("__id"), col("sub"),
+                slice(col("__iv"), col("sub") * subDim + 1, lit(subDim)).as("__s")))
       var books: Seq[Seq[Seq[Long]]] = (0 until m).map { sub =>
         seedVecs.map(_.slice(sub * subDim, sub * subDim + subDim))
       }
@@ -698,7 +697,7 @@ object Ann {
       (0 until k).map { cid =>
         (cid.toLong, (0 until m).flatMap(s => books(s)(cid)).toSeq)
       }
-    } finally graft.io.Pins.release(sliced)
+    }
   }
 
   /** IVF coarse quantization: assign each vector to the max-dot of
@@ -881,11 +880,10 @@ object Ann {
     // pin: training + re-assignment read the members repeatedly, and
     // the swap must never re-read the live directory it is replacing
     graft.io.Tables.recoverPartitionTrash(path, "cell")
-    val members = spark.read.parquet(path)
-      .withColumn("cell", col("cell").cast("long"))
-      .filter(col("cell") === cell)
-      .localCheckpoint(true)
-    try {
+    graft.io.Pins.scope {
+      val members = pin(spark.read.parquet(path)
+        .withColumn("cell", col("cell").cast("long"))
+        .filter(col("cell") === cell))
       // pre-mutation guard, TYPED: a 1-row (or empty) cell cannot
       // 2-way split — without this the generic trainer require would
       // be indistinguishable from a real failure to a balance pass
@@ -899,34 +897,31 @@ object Ann {
       val children = sub.zipWithIndex.map { case ((_, cv), i) =>
         (base + 1 + i, cv)
       }
-      val reassigned = ivfAssignInt(members.drop("cell", "cdot"),
-                                    vecCol, children)
-        .localCheckpoint(true)
-      try {
-        // BEFORE touching the index: a cell whose members the trained
-        // children cannot separate (all-identical duplicate vectors;
-        // magnitude-only spread, which max-dot routes one way) would
-        // "split" into one full child and one phantom empty id — the
-        // hot cell stays hot and a split-until-balanced loop never
-        // terminates. Fail loudly instead; the index is untouched.
-        val counts = reassigned.groupBy(col("cell")).count()
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        if (!children.forall(c => counts.getOrElse(c._1, 0L) > 0L))
-          throw new UnsplittableCellException(
-            s"cell $cell cannot split: the trained children do not separate " +
-            s"its members (per-child counts $counts)")
-        // the swap list names BOTH CHILDREN FIRST, the split cell
-        // LAST: replacePartitions moves exactly the listed partitions
-        // in order and a crash mid-swap must leave rows DUPLICATED
-        // (children committed, split dir still live — visible, and
-        // recovery = delete the child dirs or re-delete the cell),
-        // never silently lost (cell-first would trash the only copy
-        // before any child lands)
-        graft.io.Tables.replacePartitions(spark, path, "cell",
-          children.map(_._1) :+ cell, reassigned)
-        centroids.filterNot(_._1 == cell) ++ children
-      } finally graft.io.Pins.release(reassigned)
-    } finally graft.io.Pins.release(members)
+      val reassigned = pin(ivfAssignInt(members.drop("cell", "cdot"),
+                                        vecCol, children))
+      // BEFORE touching the index: a cell whose members the trained
+      // children cannot separate (all-identical duplicate vectors;
+      // magnitude-only spread, which max-dot routes one way) would
+      // "split" into one full child and one phantom empty id — the
+      // hot cell stays hot and a split-until-balanced loop never
+      // terminates. Fail loudly instead; the index is untouched.
+      val counts = reassigned.groupBy(col("cell")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      if (!children.forall(c => counts.getOrElse(c._1, 0L) > 0L))
+        throw new UnsplittableCellException(
+          s"cell $cell cannot split: the trained children do not separate " +
+          s"its members (per-child counts $counts)")
+      // the swap list names BOTH CHILDREN FIRST, the split cell
+      // LAST: replacePartitions moves exactly the listed partitions
+      // in order and a crash mid-swap must leave rows DUPLICATED
+      // (children committed, split dir still live — visible, and
+      // recovery = delete the child dirs or re-delete the cell),
+      // never silently lost (cell-first would trash the only copy
+      // before any child lands)
+      graft.io.Tables.replacePartitions(spark, path, "cell",
+        children.map(_._1) :+ cell, reassigned)
+      centroids.filterNot(_._1 == cell) ++ children
+    }
   }
 
   /** One balance action: which cell, how many rows it held when

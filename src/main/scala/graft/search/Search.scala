@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
 import graft.io.Tables
 
 /** Search operators (reference Q1–Q5 + F14, SURVEY.md §2.11).
@@ -463,10 +464,10 @@ object Search {
     * subtrees across DataFrame branches, so without the pin each
     * stage would re-parse the corpus). Seed-doc and term sets are
     * constant-size and broadcast; both cuts are
-    * TakeOrderedAndProject. Exact integers end to end. Caller owns
-    * releasing the pin via the returned frame's lifecycle (it is
-    * dropped with the JVM; per-query serving should route through a
-    * longer-lived term index like the postings table instead).
+    * TakeOrderedAndProject. Exact integers end to end. The pin belongs
+    * to the caller's [[graft.io.Pins.scope]] (per-query serving should
+    * route through a longer-lived term index like the postings table
+    * instead).
     */
   def prfTopK(df: DataFrame, idCol: String, contentCol: String,
               query: String, seedK: Int = 3, expand: Int = 2,
@@ -476,12 +477,11 @@ object Search {
     import sp.implicits._
     val qts = queryTokens(query).distinct
     require(qts.nonEmpty, "query must contain at least one word token")
-    val tf = df.select(col(idCol),
+    val tf = pin(df.select(col(idCol),
         explode(filter(split(lower(coalesce(col(contentCol), lit(""))),
                              "\\W+"),
                        t => t =!= "")).as("term"))
-      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     val seed = qts.toDF("term")
     val top = tf.join(broadcast(seed), Seq("term"))
       .groupBy(col(idCol)).agg(sum(col("tf")).as("score0"))
@@ -578,8 +578,7 @@ object Search {
     val toks = docs.select(
       explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\W+"),
                      t => t =!= "")).as("tok"))
-    val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val vocab = pin(toks.groupBy(col("tok")).agg(count(lit(1)).as("tf")))
     val tvar = deleteVariants(vocab.select(col("tok")), "tok")
       .select(col("s").as("term"), col("pos").as("tpos"), col("v"))
     val pvar = deleteVariants(probes.select(col(probeCol)).distinct(), probeCol)
@@ -780,9 +779,9 @@ object Search {
     // row, and N/T must stop counting a taken-down doc)
     val norms = new java.io.File(normsPath(path))
     if (Tables.recover(norms)) {
-      val kept = spark.read.parquet(norms.toString)
-        .join(removals.select(col(idCol)), Seq(idCol), "left_anti")
-        .localCheckpoint(true) // pinned BEFORE the dir it read is swapped
+      // pinned BEFORE the dir it read is swapped
+      val kept = pin(spark.read.parquet(norms.toString)
+        .join(removals.select(col(idCol)), Seq(idCol), "left_anti"))
       Tables.swap(norms, "postingsNorms")(kept.write.mode("overwrite").parquet(_))
     }
     if (postingsIsEmpty(path)) return // already-empty index: no-op

@@ -264,7 +264,7 @@ object VectorIndex {
     */
   def reconcile(spark: SparkSession, path: String, storeSlice: DataFrame,
                 idCol: String, vecCol: String): (Long, Long) =
-    graft.io.Tables.withTableLock(path) {
+    graft.io.Tables.withTableLock(path) { graft.io.Pins.scope {
     val meta = readMeta(path)
     val slice = storeSlice.select(col(idCol), col(vecCol))
     val idx =
@@ -272,27 +272,21 @@ object VectorIndex {
         Some(spark.read.parquet(path)
           .select(col(idCol), col("cell").cast("long").as("cell")))
       else None
-    val removals = idx.map(
-      _.join(slice.select(col(idCol)), Seq(idCol), "left_anti")
-        .localCheckpoint(true))
-    val appends = (idx match {
+    val removals = idx.map(i => graft.io.Pins.pin(
+      i.join(slice.select(col(idCol)), Seq(idCol), "left_anti")))
+    val appends = graft.io.Pins.pin(idx match {
       case Some(i) => slice.join(i.select(col(idCol)), Seq(idCol), "left_anti")
       case None    => slice
-    }).localCheckpoint(true)
-    try {
-      val nRemoved = removals.map(_.count()).getOrElse(0L)
-      val nAppended = appends.count()
-      if (nRemoved > 0)
-        removals.foreach(Ann.ivfRemoveFromIndex(spark, path, _, idCol))
-      if (nAppended > 0)
-        Ann.ivfPqAppendIndex(appends, idCol, vecCol, meta.centroids,
-                             meta.codebooks, path, meta.m, meta.dims)
-      (nAppended, nRemoved)
-    } finally {
-      removals.foreach(graft.io.Pins.release)
-      graft.io.Pins.release(appends)
-    }
-    }
+    })
+    val nRemoved = removals.map(_.count()).getOrElse(0L)
+    val nAppended = appends.count()
+    if (nRemoved > 0)
+      removals.foreach(Ann.ivfRemoveFromIndex(spark, path, _, idCol))
+    if (nAppended > 0)
+      Ann.ivfPqAppendIndex(appends, idCol, vecCol, meta.centroids,
+                           meta.codebooks, path, meta.m, meta.dims)
+    (nAppended, nRemoved)
+    }}
 
   // ------------------------------------------------------------- balance
 

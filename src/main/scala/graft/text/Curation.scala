@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
+
 /** Corpus-curation sampling operators — the mixture-shaping passes a
   * training-data pipeline runs after cleaning/dedup and before
   * packing (none present in the reference, which stops at chunking —
@@ -63,13 +65,12 @@ object Curation {
     * Plan shape: one map-combined stratum count (k rows), its max as a
     * 1-row broadcast, rates broadcast-joined back onto the scan —
     * nothing driver-side, no shuffle of the corpus itself.
-    * Pins a `localCheckpoint`; release via [[graft.io.Pins.release]].
+    * The pin belongs to the caller's [[graft.io.Pins.scope]].
     */
   def temperatureSample(df: DataFrame, idCol: String, strataCol: String): DataFrame = {
     // pinned: nmax and the rate join both read it — unpinned, the
     // corpus-wide count would run once per branch
-    val counts = df.groupBy(col(strataCol)).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val counts = pin(df.groupBy(col(strataCol)).agg(count(lit(1)).as("n")))
     val nmax = counts.agg(max(col("n")).as("nmax"))
     val rates = counts.crossJoin(broadcast(nmax))
       .withColumn("rate",
@@ -282,10 +283,9 @@ object Curation {
     // the pin is what makes "the corpus is read once" true (Spark
     // shares no subtrees across DataFrame branches — unpinned, the
     // marginal branch and the score branch would each re-explode the
-    // corpus). Doc×buckets-sized; swept by the harness between queries.
-    val dc = toks.groupBy(col(idCol), col("is_target"), col("feat"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    // corpus). Doc×buckets-sized; freed with the caller's scope.
+    val dc = pin(toks.groupBy(col(idCol), col("is_target"), col("feat"))
+      .agg(count(lit(1)).as("c")))
     val cnt = dc.groupBy(col("feat"))
       .agg(sum(when(col("is_target"), col("c")).otherwise(0L)).as("t_f"),
            sum(when(!col("is_target"), col("c")).otherwise(0L)).as("r_f"))

@@ -273,7 +273,7 @@ object Profile {
     * re-read the corpus.
     */
   def sketchOverlap(regs: DataFrame, groupCol: String): DataFrame = {
-    val r = regs.localCheckpoint()
+    val r = graft.io.Pins.pin(regs)
     val single = estimateFromRegs(r, Seq(groupCol), "est")
     val pairs = r.select(col(groupCol).as("g_a"), col("bucket"))
       .join(r.select(col(groupCol).as("g_b"), col("bucket")), Seq("bucket"))

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
 import graft.io.Tables
 
 /** THE STORE'S INCREMENTAL PROFILE ARTIFACT — the product wiring of
@@ -220,11 +221,10 @@ object ProfileState {
     // pin the (doc_id, strategy, content) input ONCE: the four part
     // writes are four actions, and an unpinned input would re-chunk/
     // re-tokenize per part (4 batch passes on the fold path, 4 table
-    // scans on the rebuild path); the pin is released with the commit
-    val base = (if (foldable) addChunks else rebuildFrom)
-      .select(col("doc_id"), col("strategy"), col("content"))
-      .localCheckpoint(true)
-    try {
+    // scans on the rebuild path); the pin is freed with the commit
+    graft.io.Pins.scope {
+      val base = pin((if (foldable) addChunks else rebuildFrom)
+        .select(col("doc_id"), col("strategy"), col("content")))
       val folded =
         if (foldable) fold(oldParts, base, subChunks)
         else fromChunks(base)
@@ -233,25 +233,22 @@ object ProfileState {
         // demotion-exact registers behind the cost gate: the touched
         // shards' registers rebuild from the COMMITTED table (the
         // delete path's mechanism), every other shard keeps its fold
-        val touchedLive = rebuildFrom
+        val touchedLive = pin(rebuildFrom
           .filter(graft.dedup.Dedup.hashBucket(col("doc_id"), RegShards)
                     .isin(touched: _*))
-          .select(col("doc_id"), col("strategy"), col("content"))
-          .localCheckpoint(true)
-        try {
-          val nRescanned = touchedLive.count()
-          val regs = folded.regs.filter(!col("shard").isin(touched: _*))
-            .unionByName(fromChunks(touchedLive).regs)
-          graft.io.Faults.point("profileState.before-commit")
-          write(spark, storeDir, folded.copy(regs = regs), newFp)
-          Some(nRescanned)
-        } finally graft.io.Pins.release(touchedLive)
+          .select(col("doc_id"), col("strategy"), col("content")))
+        val nRescanned = touchedLive.count()
+        val regs = folded.regs.filter(!col("shard").isin(touched: _*))
+          .unionByName(fromChunks(touchedLive).regs)
+        graft.io.Faults.point("profileState.before-commit")
+        write(spark, storeDir, folded.copy(regs = regs), newFp)
+        Some(nRescanned)
       } else {
         graft.io.Faults.point("profileState.before-commit")
         write(spark, storeDir, folded, newFp)
         None
       }
-    } finally graft.io.Pins.release(base)
+    }
   }
 
   /** The DELETE-side commit: the additive parts fold the exact
@@ -274,26 +271,22 @@ object ProfileState {
                         deletedIds: Seq[String],
                         liveChunks: => DataFrame): Option[Long] = {
     val newFp = dirFingerprint(chunksDir)
-    if (!foldable || oldParts.isEmpty) {
-      val base = liveChunks
-        .select(col("doc_id"), col("strategy"), col("content"))
-        .localCheckpoint(true)
-      try {
+    graft.io.Pins.scope {
+      if (!foldable || oldParts.isEmpty) {
+        val base = pin(liveChunks
+          .select(col("doc_id"), col("strategy"), col("content")))
         graft.io.Faults.point("profileState.before-commit")
         write(spark, storeDir, fromChunks(base), newFp)
         None
-      } finally graft.io.Pins.release(base)
-    } else {
-      val touched = deletedIds.map(shardOf).distinct
-      // pinned: the shard-bounded survivor slice is counted (the
-      // runlog's scan-bound evidence) AND tokenized for the register
-      // rebuild — one scan of the touched shards, not two
-      val touchedLive = liveChunks
-        .filter(graft.dedup.Dedup.hashBucket(col("doc_id"), RegShards)
-                  .isin(touched: _*))
-        .select(col("doc_id"), col("strategy"), col("content"))
-        .localCheckpoint(true)
-      try {
+      } else {
+        val touched = deletedIds.map(shardOf).distinct
+        // pinned: the shard-bounded survivor slice is counted (the
+        // runlog's scan-bound evidence) AND tokenized for the register
+        // rebuild — one scan of the touched shards, not two
+        val touchedLive = pin(liveChunks
+          .filter(graft.dedup.Dedup.hashBucket(col("doc_id"), RegShards)
+                    .isin(touched: _*))
+          .select(col("doc_id"), col("strategy"), col("content")))
         val nRescanned = touchedLive.count()
         val rebuilt = fromChunks(touchedLive).regs
         val regs = oldParts.get.regs
@@ -304,7 +297,7 @@ object ProfileState {
         graft.io.Faults.point("profileState.before-commit")
         write(spark, storeDir, parts, newFp)
         Some(nRescanned)
-      } finally graft.io.Pins.release(touchedLive)
+      }
     }
   }
 

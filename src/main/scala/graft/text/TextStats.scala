@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.io.Pins.pin
+
 /** Text-analysis operators for a training-data pipeline (north-star
   * extension per BASELINE.json; not present in the reference, which
   * stops at chunking — solaius/data_pipeline2 `services/docling_service.py`).
@@ -381,17 +383,15 @@ object TextStats {
     * ever materializing its full occurrence list per task) → regroup
     * per doc. Linear at any corpus size.
     *
-    * Pins a `localCheckpoint` (one scan feeds both branches); the
-    * caller owns the release — [[graft.io.Pins.release]] on the result
-    * after the terminal action.
+    * Pins its exploded table (one scan feeds both branches); the pin
+    * belongs to the caller's [[graft.io.Pins.scope]].
     */
   def dedupParagraphs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val id = col(idCol)
     // one explode feeds both aggregates — without the pin Catalyst
     // splits them into two full corpus scans (the q65 idiom)
-    val paras = df.select(id,
-        posexplode(split(col(textCol), "\n\n")).as(Seq("pn", "para")))
-      .localCheckpoint(true)
+    val paras = pin(df.select(id,
+        posexplode(split(col(textCol), "\n\n")).as(Seq("pn", "para"))))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(col("para"))).orderBy(id.asc, col("pn").asc)
     // EMPTY paragraphs (3+ consecutive newlines make "" split entries)
@@ -432,16 +432,15 @@ object TextStats {
     * stopword-heavy keys never shuffle; an oversized induced vocab
     * (Heaps' law at web scale) falls back to a shuffle, never a
     * multi-GB driver build.
-    * Pins a `localCheckpoint`; release via [[graft.io.Pins.release]].
+    * The pin belongs to the caller's [[graft.io.Pins.scope]].
     */
   def oovSignals(df: DataFrame, idCol: String, textCol: String,
                  minCount: Int = 2): DataFrame = {
     val id = col(idCol)
-    val tf = df
+    val tf = pin(df
       .select(id, graft.dedup.Dedup.splitAssign(id).as("split"),
               explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy(id, col("split"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .groupBy(id, col("split"), col("term")).agg(count(lit(1)).as("tf")))
     val vocab = tf.filter(col("split") === "train")
       .groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
       .filter(col("cnt") >= minCount).select(col("term"))
@@ -484,18 +483,17 @@ object TextStats {
     * small, and an oversized one falls back to a shuffle instead of a
     * driver-side build); V is 1 row; only the bigram-count join
     * always shuffles, on the well-spread (w1,w2) key.
-    * Pins a `localCheckpoint`; release via [[graft.io.Pins.release]].
+    * The pin belongs to the caller's [[graft.io.Pins.scope]].
     */
   def lmFluency(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val id = col(idCol)
     val toks = bpeTokens(col(textCol))
     val nPairs = greatest(size(toks) - 1, lit(0))
-    val pairs = df
+    val pairs = pin(df
       .select(id, graft.dedup.Dedup.splitAssign(id).as("split"),
               explode(zip_with(slice(toks, lit(1), nPairs), slice(toks, lit(2), nPairs),
                                (a, b) => struct(a.as("w1"), b.as("w2")))).as("pr"))
-      .select(id, col("split"), col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-      .localCheckpoint(true)
+      .select(id, col("split"), col("pr.w1").as("w1"), col("pr.w2").as("w2")))
     val train = pairs.filter(col("split") === "train")
     val cBi = train.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cbi"))
     val cUni = train.groupBy(col("w1")).agg(count(lit(1)).as("cuni"))
@@ -542,13 +540,13 @@ object TextStats {
     val base = df.select(toks.as("__toks"))
       .select(col("__toks"),
               greatest(size(col("__toks")) - 1, lit(0)).as("__np"))
-    val pairs = base
+    // four readers: bigram, both marginals, N
+    val pairs = pin(base
       .select(explode(zip_with(
           slice(col("__toks"), lit(1), col("__np")),
           slice(col("__toks"), lit(2), col("__np")),
           (a, b) => struct(a.as("w1"), b.as("w2")))).as("pr"))
-      .select(col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-      .localCheckpoint(true) // four readers: bigram, both marginals, N
+      .select(col("pr.w1").as("w1"), col("pr.w2").as("w2")))
     val cBi = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= minCount)
@@ -581,15 +579,14 @@ object TextStats {
     * under a BOUNDED broadcast ([[graft.io.Joins.boundedBroadcast]] —
     * shuffle fallback if the induced vocab outgrows the bound); one
     * regroup per doc.
-    * Pins a `localCheckpoint`; release via [[graft.io.Pins.release]].
+    * The pin belongs to the caller's [[graft.io.Pins.scope]].
     */
   def tokenizeToIds(df: DataFrame, idCol: String, textCol: String,
                     minCount: Int = 2): DataFrame = {
     val id = col(idCol)
-    val tok = df
+    val tok = pin(df
       .select(id, graft.dedup.Dedup.splitAssign(id).as("split"),
-              posexplode(bpeTokens(col(textCol))).as(Seq("pos", "term")))
-      .localCheckpoint(true)
+              posexplode(bpeTokens(col(textCol))).as(Seq("pos", "term"))))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("c").desc, col("term").asc) // dictionary-sized, not corpus
     val vocab = tok.filter(col("split") === "train")
@@ -628,14 +625,13 @@ object TextStats {
     * count-over-term window would avoid the join but buffers a hot
     * term's whole partition — the groupBy keeps stopword terms as
     * partial counts, never a resident row set.
-    * Pins a `localCheckpoint`; release via [[graft.io.Pins.release]].
+    * The pin belongs to the caller's [[graft.io.Pins.scope]].
     */
   def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String,
                     k: Int = 3): DataFrame = {
-    val tf = df.select(col(idCol), explode(tokens(lower(col(textCol)))).as("term"))
+    val tf = pin(df.select(col(idCol), explode(tokens(lower(col(textCol)))).as("term"))
       .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)
@@ -816,11 +812,8 @@ object TextStats {
       .agg(count(lit(1)).as("n_words"), sum(col("__n")).as("n_tokens"))
   }
 
-  def bpeTrain(df: DataFrame, textCol: String, rounds: Int = 3): DataFrame = {
-    val (merges, vocab) = bpeTrainWithVocab(df, textCol, rounds)
-    graft.io.Pins.release(vocab)
-    merges
-  }
+  def bpeTrain(df: DataFrame, textCol: String, rounds: Int = 3): DataFrame =
+    graft.io.Pins.scope(bpeTrainWithVocab(df, textCol, rounds)._1)
 
   /** [[bpeTrain]] exposing the FOLDED VOCABULARY its last round already
     * holds — (word, syms) after every learned merge — so a
@@ -828,50 +821,41 @@ object TextStats {
     * words straight against `size(syms)` instead of re-deriving the
     * distinct vocab from the corpus and re-running every merge fold
     * over it ([[bpeApply]]'s standalone path, still the right shape
-    * for STORED merges). The returned vocab is pinned; the CALLER owns
-    * the release (Pins contract).
+    * for STORED merges). The returned vocab and every round's vocab
+    * are pins of the caller's [[graft.io.Pins.scope]].
     */
   def bpeTrainWithVocab(df: DataFrame, textCol: String,
                         rounds: Int = 3): (DataFrame, DataFrame) = {
     val sp = df.sparkSession
     import sp.implicits._
-    var cur = df
+    var cur = pin(df
       .select(explode(filter(split(lower(col(textCol)), "\\W+"),
                              w => w =!= "")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      .select(col("w"), col("f"), split(col("w"), "").as("syms"))
-      .localCheckpoint(true)
+      .select(col("w"), col("f"), split(col("w"), "").as("syms")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var r = 1
     var done = false
-    try {
-      while (r <= rounds && !done) {
-        // single-symbol words carry no pairs — and MUST be filtered, not
-        // left to the sequence: Spark's sequence(1, 0) DESCENDS
-        val best = cur.filter(size(col("syms")) >= 2)
-          .select(col("f"),
-            explode(transform(sequence(lit(1), size(col("syms")) - 1),
-              i => struct(element_at(col("syms"), i).as("lft"),
-                          element_at(col("syms"), i + 1).as("rgt")))).as("p"))
-          .groupBy(col("p.lft").as("lft"), col("p.rgt").as("rgt"))
-          .agg(sum(col("f")).as("cnt"))
-          .orderBy(col("cnt").desc, col("lft").asc, col("rgt").asc)
-          .limit(1).collect()
-        if (best.isEmpty) done = true
-        else {
-          val (l, rt, cnt) =
-            (best.head.getString(0), best.head.getString(1), best.head.getLong(2))
-          merges += ((r.toLong, l, rt, cnt))
-          val next = cur
-            .withColumn("syms", bpeMergeFold(col("syms"), l, rt))
-            .localCheckpoint(true)
-          graft.io.Pins.release(cur)
-          cur = next
-          r += 1
-        }
+    while (r <= rounds && !done) {
+      // single-symbol words carry no pairs — and MUST be filtered, not
+      // left to the sequence: Spark's sequence(1, 0) DESCENDS
+      val best = cur.filter(size(col("syms")) >= 2)
+        .select(col("f"),
+          explode(transform(sequence(lit(1), size(col("syms")) - 1),
+            i => struct(element_at(col("syms"), i).as("lft"),
+                        element_at(col("syms"), i + 1).as("rgt")))).as("p"))
+        .groupBy(col("p.lft").as("lft"), col("p.rgt").as("rgt"))
+        .agg(sum(col("f")).as("cnt"))
+        .orderBy(col("cnt").desc, col("lft").asc, col("rgt").asc)
+        .limit(1).collect()
+      if (best.isEmpty) done = true
+      else {
+        val (l, rt, cnt) =
+          (best.head.getString(0), best.head.getString(1), best.head.getLong(2))
+        merges += ((r.toLong, l, rt, cnt))
+        cur = pin(cur.withColumn("syms", bpeMergeFold(col("syms"), l, rt)))
+        r += 1
       }
-    } catch {
-      case e: Throwable => graft.io.Pins.release(cur); throw e
     }
     (merges.toSeq.toDF("round", "lft", "rgt", "pair_count"), cur)
   }
@@ -917,19 +901,17 @@ object TextStats {
     * same failure mode as a corpus collect. `tok` is a well-spread
     * key, so the shuffle is clean; only the SOURCES-sized per-source
     * totals and the 1-row corpus total broadcast. The counts table
-    * is pinned (`localCheckpoint`) because three aggregates read it;
-    * caller releases via [[graft.io.Pins.release]] after the terminal
-    * action. Headroom: Σ c·Δlog stays in BIGINT to ~10^13 tokens per
+    * is pinned because three aggregates read it; the pin belongs to
+    * the caller's [[graft.io.Pins.scope]]. Headroom: Σ c·Δlog stays in BIGINT to ~10^13 tokens per
     * source.
     */
   def sourceKlDivergence(df: DataFrame, sourceCol: String,
                          textCol: String): DataFrame = {
-    val counts = df
+    val counts = pin(df
       .select(col(sourceCol).as("source"),
               explode(tokens(lower(col(textCol)))).as("tok"))
       .groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("c")))
     val perSource = counts.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val perToken = counts.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
     val total = perSource.agg(sum(col("ns")).as("n"))

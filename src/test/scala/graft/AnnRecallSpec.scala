@@ -234,11 +234,11 @@ class AnnRecallSpec extends SparkSpec {
     val (cents, books) = Ann.withIntVec(cemb, "vec_id", "embedding") { iv =>
       (Ann.kmeansFitInt(iv, k = 5, rounds = 2), Ann.pqTrainInt(iv, k = 5, rounds = 2))
     }
-    val indexed = Ann.pqEncodeInt(
-        Ann.ivfAssignInt(cemb, "embedding", cents),
-        "vec_id", "embedding", books)
-      .localCheckpoint(true) // probed NQueries times
-    try {
+    graft.io.Pins.scope {
+      // probed NQueries times
+      val indexed = graft.io.Pins.pin(Ann.pqEncodeInt(
+          Ann.ivfAssignInt(cemb, "embedding", cents),
+          "vec_id", "embedding", books))
       val xs = cvecs.map { case (id, v) => id -> v.map(Ann.quantizeL).toSeq }
       val per = (0 until 10).map { qi =>
         val qIv = xs(qi)._2
@@ -254,7 +254,7 @@ class AnnRecallSpec extends SparkSpec {
       info(f"trained-stack recall@$K=$recall%.2f (kmeansFitInt + pqTrainInt)")
       assert(recall >= 0.9,
              f"trained quantizers recall $recall%.2f under the 0.9 floor")
-    } finally graft.io.Pins.release(indexed)
+    }
   }
 
   test("ivfRecallAtK counts exactly the probe's misses on a planted split corpus") {

@@ -77,13 +77,14 @@ class BpeMergeSpec extends SparkSpec {
     // the CLI tokenizer runs 16 rounds, the queries 3; 20 merges exist
     // in these two 11-letter words
     val docs = Seq("abcdefghijk lmnopqrstuv abcdefghijk").toDF("text")
-    val (merges, vocab) = TextStats.bpeTrainWithVocab(docs, "text", rounds = 20)
-    val sizes = vocab.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+    graft.io.Pins.scope {
+      val (merges, vocab) = TextStats.bpeTrainWithVocab(docs, "text", rounds = 20)
+      val sizes = vocab.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+      }
+      assert(merges.count() == 20L)
+      assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
     }
-    assert(merges.count() == 20L)
-    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
-    graft.io.Pins.release(vocab)
   }
 
   test("bpeApply: ordered merges compress per-doc token counts, partial merges exact") {

@@ -54,13 +54,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     // inherits that estimate; uncapped, the 64-node chain's 6 rounds
     // leave an estimate thousands of bits long
     val chain = (1 to 63).map(i => (f"v$i%02d", f"v${i + 1}%02d"))
-    val labels = Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b")
-    val sizes = labels.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.computeStats().sizeInBytes
+    graft.io.Pins.scope {
+      val labels = Dedup.connectedComponents(chain.toDF("a", "b"), "a", "b")
+      val sizes = labels.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          lr.computeStats().sizeInBytes
+      }
+      assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
     }
-    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
-    graft.io.Pins.release(labels)
   }
 
   test("maxIters guard: a long chain with 1 round fails loudly") {
@@ -72,19 +73,6 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("empty edge list yields empty labels without looping") {
     val empty = Seq.empty[(String, String)].toDF("a", "b")
     assert(Dedup.connectedComponents(empty, "a", "b").count() == 0)
-  }
-
-  test("reliable checkpoint dir is honored when provided") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-    val got = Dedup.connectedComponents(
-      Seq(("a", "b"), ("b", "c")).toDF("a", "b"), "a", "b",
-      checkpointDir = Some(dir.toString))
-      .as[(String, String)].collect().toMap
-    assert(got == Map("a" -> "a", "b" -> "a", "c" -> "a"))
-    // the reliable checkpoint actually wrote RDD files
-    def anyFile(f: java.io.File): Boolean =
-      f.isFile || Option(f.listFiles()).exists(_.exists(anyFile))
-    assert(anyFile(dir.toFile), "no checkpoint files written")
   }
 
   test("a context-set checkpoint dir opts CC into reliable rounds (Bench posture)") {

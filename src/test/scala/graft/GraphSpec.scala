@@ -165,14 +165,15 @@ class GraphSpec extends SparkSpec {
     // each round joins the last pin twice and pins the result; q168
     // runs 2 rounds, this runs 8 along a path that keeps every round busy
     val path = (1L to 12L).map(i => (i, i + 1))
-    val lab = Graph.labelPropagate(path.toDF("a", "b"), "a", "b",
-                                   Seq(1L -> "x").toDF("id", "lab"), "id", "lab",
-                                   iters = 8)
-    val sizes = lab.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+    graft.io.Pins.scope {
+      val lab = Graph.labelPropagate(path.toDF("a", "b"), "a", "b",
+                                     Seq(1L -> "x").toDF("id", "lab"), "id", "lab",
+                                     iters = 8)
+      val sizes = lab.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.computeStats().sizeInBytes
+      }
+      assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
+      assert(lab.count() == 9L)
     }
-    assert(sizes.nonEmpty && sizes.forall(_ <= BigInt(Long.MaxValue)), sizes)
-    assert(lab.count() == 9L)
-    graft.io.Pins.release(lab)
   }
 }

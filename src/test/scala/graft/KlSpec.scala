@@ -39,12 +39,9 @@ class KlSpec extends SparkSpec {
     }
   }
 
-  private def run(rows: Seq[(String, String)]) = {
-    val df = TextStats.sourceKlDivergence(
-      rows.toDF("source", "text"), "source", "text")
-    val got = df.orderBy("source").as[(String, Long, Long)].collect().toSeq
-    Pins.release(df)
-    got
+  private def run(rows: Seq[(String, String)]) = Pins.scope {
+    TextStats.sourceKlDivergence(rows.toDF("source", "text"), "source", "text")
+      .orderBy("source").as[(String, Long, Long)].collect().toSeq
   }
 
   test("exactly the BigInt driver twin (truncating div, both engines)") {
@@ -71,17 +68,18 @@ class KlSpec extends SparkSpec {
   }
 
   test("plan: per-token join SHUFFLES (vocab must never broadcast), no UDF") {
-    val df = TextStats.sourceKlDivergence(
-      Seq("a" -> "x y", "b" -> "x z").toDF("source", "text"),
-      "source", "text")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF("))
-    // the vocabulary-sized per-token totals ride a shuffled hash join —
-    // at 100 TB a \W+ vocab is 10^8-10^9 rows, a multi-GB broadcast
-    assert(plan.contains("ShuffledHashJoin"), plan)
-    // only the sources-sized and 1-row tables broadcast
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
-    Pins.release(df)
+    Pins.scope {
+      val df = TextStats.sourceKlDivergence(
+        Seq("a" -> "x y", "b" -> "x z").toDF("source", "text"),
+        "source", "text")
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("UDF("))
+      // the vocabulary-sized per-token totals ride a shuffled hash join —
+      // at 100 TB a \W+ vocab is 10^8-10^9 rows, a multi-GB broadcast
+      assert(plan.contains("ShuffledHashJoin"), plan)
+      // only the sources-sized and 1-row tables broadcast
+      assert(plan.contains("BroadcastHashJoin"), plan)
+      assert(!plan.contains("SortMergeJoin"), plan)
+    }
   }
 }

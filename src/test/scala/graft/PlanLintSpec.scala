@@ -29,15 +29,13 @@ class PlanLintSpec extends SparkSpec {
     "q85_xlsx_roundtrip", "q86_image_dhash", "q88_audio_fingerprint")
 
   // plans computed ONCE for both tests — building a query executes its
-  // eager localCheckpoints, so the pins are swept before any assertion
-  // (they'd otherwise stay resident for every later suite in the
-  // shared session)
-  private lazy val plans: Map[String, String] = {
-    val ps = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+  // eager pins, so the scope frees them before any assertion (they'd
+  // otherwise stay resident for every later suite in the shared
+  // session)
+  private lazy val plans: Map[String, String] = graft.io.Pins.scope {
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> fn(spark, Sf001).queryExecution.executedPlan.toString
     }.toMap
-    graft.io.Pins.sweepAll(spark)
-    ps
   }
 
   test("no query plans a CartesianProduct, Python eval, or unexpected ScalaUDF") {

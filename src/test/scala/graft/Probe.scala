@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.io.Pins
 
 /** Measured scale curves the scale specs assert on (`ScaleCurveSpec`,
   * `StreamingSpec`, `SkewSpec`): each curve times one operator family
@@ -55,17 +56,15 @@ object Probe {
                       factors: Seq[Int] = Seq(1, 10, 100),
                       reps: Int = 3): Seq[ScalePoint] = {
     def med(f: => Long): (Double, Long) = medOf(reps)(f)
-    factors.map { fac =>
+    factors.map { fac => Pins.scope {
       val n = base * fac
-      val docs = syntheticDocs(spark, n).localCheckpoint(true)
+      val docs = Pins.pin(syntheticDocs(spark, n))
       // the incremental probe: last 10% arrives as the new batch
       val cut = s"d${"%08d".format(n - n / 10)}"
-      val stored = graft.dedup.Dedup
-        .minhashSignatures(docs.filter(col("doc_id") < cut), "doc_id", "text")
-        .localCheckpoint(true)
-      val newSigs = graft.dedup.Dedup
-        .minhashSignatures(docs.filter(col("doc_id") >= cut), "doc_id", "text")
-        .localCheckpoint(true)
+      val stored = Pins.pin(graft.dedup.Dedup
+        .minhashSignatures(docs.filter(col("doc_id") < cut), "doc_id", "text"))
+      val newSigs = Pins.pin(graft.dedup.Dedup
+        .minhashSignatures(docs.filter(col("doc_id") >= cut), "doc_id", "text"))
       val (tSign, _) = med {
         graft.dedup.Dedup.minhashSignatures(docs, "doc_id", "text").count()
       }
@@ -80,10 +79,8 @@ object Probe {
       val (tIncr, _) = med {
         Dedup.incrementalCandidates(newSigs, stored).count()
       }
-      docs.unpersist(); stored.unpersist(); newSigs.unpersist()
-      graft.io.Pins.sweepAll(spark) // clustering's label pins
       ScalePoint(fac, n, nPairs, nClusters, tSign, tPairs, tClusters, tIncr)
-    }
+    }}
   }
 
   /** Synthetic CLUSTERED embeddings: `n` vectors, 64 dims, 32
@@ -127,9 +124,9 @@ object Probe {
     }
     def med(f: => Long): (Double, Long) = medOf(reps)(f)
     val nprobe = 2
-    factors.map { fac =>
+    factors.map { fac => Pins.scope {
       val n = base * fac
-      val emb = syntheticEmbeddings(spark, n).localCheckpoint(true)
+      val emb = Pins.pin(syntheticEmbeddings(spark, n))
       val qvF = emb.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toSeq
       val qv = qvF.map(Ann.quantizeL)
@@ -161,11 +158,9 @@ object Probe {
           spark.read.parquet(dir).withColumn("cell", col("cell").cast("long")),
           "vec_id", "embedding", qvF.map(_.toFloat), k = 10).count()
       }
-      emb.unpersist(true)
-      graft.io.Pins.sweepAll(spark) // localCheckpoint pins don't release via unpersist
       graft.io.Tables.rmTree(new java.io.File(dir).getParentFile)
       AnnScalePoint(fac, n, probedRows, tBuild, tProbe, tBrute)
-    }
+    }}
   }
 
   /** Synthetic word-doc corpus for the search curve: `wordsPerDoc`
@@ -348,26 +343,24 @@ object Probe {
     // untimed warmup: the bloom probe's literal-array expression is the
     // largest codegen unit in the suite, and its first compile would
     // otherwise pollute the 1× point (measured ~2 s of Janino time)
-    locally {
-      val w = syntheticSplitDocs(spark, nTrain, 50).localCheckpoint(true)
+    Pins.scope {
+      val w = Pins.pin(syntheticSplitDocs(spark, nTrain, 50))
       Dedup.bloomContaminationScan(w, "doc_id", "text", col("split"),
                                    mBits = mBits).count()
       Dedup.contaminationSpans(w, "doc_id", "text", col("split")).count()
-      w.unpersist(true)
     }
-    factors.map { fac =>
+    factors.map { fac => Pins.scope {
       val n = baseTest * fac
-      val docs = syntheticSplitDocs(spark, nTrain, n).localCheckpoint(true)
+      val docs = Pins.pin(syntheticSplitDocs(spark, nTrain, n))
       val (tBloom, nFlagged) = med {
         Dedup.bloomContaminationScan(docs, "doc_id", "text", col("split"),
                                      mBits = mBits).count()
       }
-      val flagged = Dedup.bloomContaminationScan(docs, "doc_id", "text",
+      val flagged = Pins.pin(Dedup.bloomContaminationScan(docs, "doc_id", "text",
           col("split"), mBits = mBits)
-        .select(col("doc_id")).localCheckpoint(true)
-      val survivors = docs.filter(col("split") === "train")
-        .unionByName(docs.join(flagged, Seq("doc_id"), "left_semi"))
-        .localCheckpoint(true)
+        .select(col("doc_id")))
+      val survivors = Pins.pin(docs.filter(col("split") === "train")
+        .unionByName(docs.join(flagged, Seq("doc_id"), "left_semi")))
       val (tSpanSurv, nSpansSurv) = med {
         Dedup.contaminationSpans(survivors, "doc_id", "text",
                                  col("split")).count()
@@ -379,11 +372,9 @@ object Probe {
       // exact pass must find every span the unfiltered pass finds
       require(nSpansSurv == nSpansFull,
         s"Bloom prefilter dropped real spans: $nSpansSurv vs $nSpansFull")
-      docs.unpersist(true); flagged.unpersist(true); survivors.unpersist(true)
-      graft.io.Pins.sweepAll(spark)
       DeconScalePoint(fac, n, nFlagged, tBloom, tSpanSurv, tSpanFull,
                       nSpansFull)
-    }
+    }}
   }
 
   case class LearnScalePoint(factor: Int, nRows: Long, tStump: Double,
@@ -402,14 +393,13 @@ object Probe {
     import org.apache.spark.sql.functions._
     import graft.learn.Learn
     def med(f: => Long): (Double, Long) = medOf(reps)(f)
-    factors.map { fac =>
+    factors.map { fac => Pins.scope {
       val n = base * fac
-      val df = spark.range(n).select(
+      val df = Pins.pin(spark.range(n).select(
           (col("id") % 97).cast("long").as("a"),
           (col("id") % 13).cast("long").as("b"),
           ((col("id") % 97) * 7 + (col("id") % 29)).cast("long").as("y"))
-        .withColumn("lab", when(col("a") >= 50, 1L).otherwise(-1L))
-        .localCheckpoint()
+        .withColumn("lab", when(col("a") >= 50, 1L).otherwise(-1L)))
       val (tStump, _) = med {
         Learn.trainStump(df, Seq("a", "b"), "lab").count()
       }
@@ -424,17 +414,14 @@ object Probe {
       // the k-means trainer joins the family: per round ONE corpus
       // pass (broadcast-literal argmin) + a k-row shuffle — timed on
       // the clustered synthetic embeddings at the same row counts
-      val emb = syntheticEmbeddings(spark, n).localCheckpoint(true)
+      val emb = Pins.pin(syntheticEmbeddings(spark, n))
       val (tKmeans, _) = med {
         graft.search.Ann.withIntVec(emb, "vec_id", "embedding")(
           graft.search.Ann.kmeansFitInt(_, k = 8, rounds = 2))
         n
       }
-      graft.io.Pins.release(emb) // Dataset.unpersist won't drop this pin
-      df.unpersist(true)
-      graft.io.Pins.sweepAll(spark)
       LearnScalePoint(fac, n, tStump, tReg, tBoost, tKmeans)
-    }
+    }}
   }
 
   case class ProfileArtifactPoint(factor: Int, nTokens: Long,
@@ -524,25 +511,23 @@ object Probe {
     val keepBc = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      factors.map { fac =>
+      factors.map { fac => Pins.scope {
         val n = base * fac
         // cold keys stride by (id div 10): the cold branch only fires on
         // multiples of 10, so a plain (id % 10000) would take only the
         // 1000 multiples-of-10 residues — div first makes the cold ids
         // consecutive and the residues genuinely uniform over 10k keys
-        val big = spark.range(n).select(
+        val big = Pins.pin(spark.range(n).select(
             col("id"),
             when(col("id") % 10 =!= 0, lit("hot"))
               .otherwise(concat(lit("k"),
                 expr("(id div 10) % 10000").cast("string")))
               .as("key"),
-            md5(col("id").cast("string")).as("payload"))
-          .localCheckpoint(true)
-        val small = spark.range(10001).select(
+            md5(col("id").cast("string")).as("payload")))
+        val small = Pins.pin(spark.range(10001).select(
             when(col("id") === 10000, lit("hot"))
               .otherwise(concat(lit("k"), col("id").cast("string"))).as("key"),
-            (col("id") * 7).as("dim"))
-          .localCheckpoint(true)
+            (col("id") * 7).as("dim")))
         def timed(aqe: Boolean)(f: => Long): (Double, Long) = {
           conf.set("spark.sql.adaptive.enabled", aqe.toString)
           conf.set("spark.sql.adaptive.skewJoin.enabled", aqe.toString)
@@ -560,10 +545,8 @@ object Probe {
         }
         require(nNaive == n && nAqe == n && nSalted == n,
           s"skew-join variants diverged: $nNaive/$nAqe/$nSalted vs $n")
-        big.unpersist(true); small.unpersist(true)
-        graft.io.Pins.sweepAll(spark)
         SkewPoint(fac, n, tNaive, tAqe, tSalted)
-      }
+      }}
     } finally {
       conf.set("spark.sql.adaptive.enabled", keepAqe)
       conf.set("spark.sql.adaptive.skewJoin.enabled", keepSkew)

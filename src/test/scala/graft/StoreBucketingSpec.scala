@@ -17,6 +17,21 @@ class StoreBucketingSpec extends SparkSpec {
 
   private val now = Timestamp.valueOf("2025-06-01 12:00:00")
 
+  test("openBucketed reads a table named by a path relative to the working directory") {
+    // a relative LOCATION would resolve against the warehouse dir and
+    // read an empty table; the files live under the working directory
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    val dir = Files.createTempDirectory(cwd, "graft_relbkt")
+    try {
+      Tables.writeBucketed((1 to 20).map(i => (s"c$i", i.toLong)).toDF("chunk_id", "v"),
+                           dir.resolve("t.parquet").toString, "chunk_id", 4)
+      val rel = cwd.relativize(dir.resolve("t.parquet")).toString
+      val got = Tables.openBucketed(spark, "graft_relbkt", rel, "chunk_id", 4)
+      assert(got.count() == 20L)
+      spark.sql("DROP TABLE IF EXISTS `graft_relbkt`")
+    } finally Tables.rmTree(dir.toFile)
+  }
+
   test("store chunks ⋈ embeddings: bucketed on disk, join plans with no shuffle") {
     val in = Files.createTempDirectory("graft_bkt_in").toFile
     val store = Files.createTempDirectory("graft_bkt_store").toString
